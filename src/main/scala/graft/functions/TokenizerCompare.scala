@@ -1,103 +1,76 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Tables, U}
+import graft.U
 
 /** Tokenizer selection eval — the corpus-level readout a pipeline runs
-  * before committing to a vocabulary: BPE ([[Bpe]]) vs byte-level BPE
-  * ([[ByteBpe]]) vs unigram-LM ([[Unigram]]) vs WordPiece
-  * ([[WordPiece]]) fertility (tokens per word) and compression (chars
-  * per token) on the SAME corpus. Composition evidence by design:
-  * every row aggregates the REGISTERED apply queries (the trained
-  * models, reused, not re-derived), and the oracle composes the
-  * engines' existing replay stacks (the two BPE replace-chains, the
-  * unigram Viterbi DP, and the WordPiece longest-match walk) as
-  * subqueries.
+  * before committing to a vocabulary: [[Bpe]] vs [[ByteBpe]] vs
+  * [[Unigram]] vs [[WordPiece]] fertility (tokens per word) and
+  * compression (chars per token) on the SAME corpus, from the trained
+  * models the applies use. The oracle composes the four apply replays
+  * as subqueries.
   *
-  * Universe note (part of the contract, mirrored in the oracle): each
-  * tokenizer reports over ITS OWN qualifying-word universe — both BPEs
-  * over all non-empty words, unigram over words of length 1..
-  * [[Unigram.MaxWordLen]], WordPiece over the same minus `#`-bearing
-  * words — so n_words/n_chars can differ between the rows; the
-  * per-word and per-token RATIOS are what the comparison is for, and
-  * each is internally consistent. The bytebpe row's "n_chars" is its
-  * native n_bytes (UTF-8 bytes ARE its alphabet; equal to chars on an
-  * ASCII corpus) — chars_per_token reads bytes_per_token for that row.
+  * Universe note (part of the contract): each tokenizer reports over
+  * ITS OWN qualifying-word universe, filtered by the same [[Subword]]
+  * predicate as its apply, so n_words/n_chars can differ between the
+  * rows; the per-word and per-token RATIOS are what the comparison is
+  * for. The bytebpe row's "n_chars" is its native n_bytes (UTF-8 bytes
+  * ARE its alphabet) — chars_per_token reads bytes_per_token there.
   */
 object TokenizerCompare {
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // r18 reshape (VERDICT r17 item 3): the previous spelling composed
-    // the four FULL apply queries, so the corpus was scanned, word-split
-    // and kernel-tokenized four times (plus four per-doc aggregates the
-    // comparison immediately re-summed away). Every per-word statistic
-    // here depends only on the WORD, so ONE corpus scan + ONE
-    // distinct-word aggregate (Zipf-bounded vocab) feeds all four
-    // branches: the two BPE kernels run once per DISTINCT word instead
-    // of once per occurrence, the unigram/WordPiece piece counts come
-    // from the same broadcast scored tables the applies use, and the
-    // corpus totals are occurrence-weighted (cnt ×) conditional sums in
-    // ONE aggregate. All sums are exact integers, so the reshape is
-    // bit-identical to the composed-replay totals (each tokenizer still
-    // reports over ITS OWN qualifying-word universe — see the scaladoc).
+    // ONE corpus scan + ONE distinct-word aggregate (Zipf-bounded
+    // vocab) feeds all four branches: the two BPE kernels run once per
+    // DISTINCT word, the unigram/WordPiece piece counts come from the
+    // scored tables the applies use, and the corpus totals are
+    // occurrence-weighted (freq ×) conditional sums in ONE aggregate.
+    // All sums are exact integers, so the totals are bit-identical to
+    // the applies'.
     "vocab_compare_tokenizers" -> ((s, d) => {
       graft.plans.BpeMerge.register(s)
       val sess = s; import sess.implicits._
-      val rules = Seq((
-        Bpe.trainRules(s, d).map(r => s"${r._2} ${r._3}"),
-        ByteBpe.trainRules(s, d).map(r => s"${r._2} ${r._3} ${r._2}_${r._3}")))
-        .toDF("bpe_rules", "bb_rules")
-      val charSyms = array_remove(split(col("word"), ""), "")
-      // ONE corpus scan, cut with an eager localCheckpoint (Zipf-bounded
-      // vocab rows): the two scored-table broadcast builds below would
-      // otherwise each re-run the scan+split+distinct lineage.
-      val words = U.fan(Tables.t(s, d, "documents").select(col("text")))
-        .select(explode(split(lower(col("text")), " ")).as("word"))
-        .filter(length(col("word")) > 0)
-        .groupBy("word").agg(count(lit(1)).as("cnt"))
-        .localCheckpoint(true)
-      val uniWords = words
-        .filter(length(col("word")).between(1, Unigram.MaxWordLen))
-        .select("word")
-      val wpWords = uniWords.filter(!col("word").contains("#"))
+      val rules = Seq((Bpe.trainRules(s, d).map(_.rule),
+        ByteBpe.trainRules(s, d).map(_.rule))).toDF("bpe_rules", "bb_rules")
+      // cut with an eager localCheckpoint: the two scored-table
+      // broadcast builds would otherwise each re-run the scan
+      val words = Subword.words(s, d, Subword.anyWord).localCheckpoint(true)
+      def scored(f: (SparkSession, String, DataFrame) => DataFrame,
+          universe: Column, as: String) = broadcast(
+        f(s, d, words.filter(universe).select("word"))
+          .select(col("word"), col("wnp").as(as)))
       val vocab = words
         .crossJoin(broadcast(rules))
-        .select(col("word"), col("cnt"),
+        .select(col("word"), col("freq"),
           length(col("word")).as("wlen"),
           length(encode(col("word"), "UTF-8")).as("wbytes"),
-          size(call_function("bpe_merge", charSyms, col("bpe_rules")))
-            .as("bpe_t"),
+          size(call_function("bpe_merge", Bpe.merges.seedCol(col("word")),
+            col("bpe_rules"))).as("bpe_t"),
           size(call_function("bpe_merge", ByteBpe.byteSyms(col("word")),
             col("bb_rules"))).as("bb_t"))
-        .join(broadcast(Unigram.scoredOf(s, d, uniWords)
-          .select(col("word"), col("wnp").as("uni_np"))), Seq("word"), "left")
-        .join(broadcast(WordPiece.scoredOf(s, d, wpWords)
-          .select(col("word"), col("wnp").as("wp_np"))), Seq("word"), "left")
+        .join(scored(Unigram.scoredOf, Subword.boundedWord, "uni_np"),
+          Seq("word"), "left")
+        .join(scored(WordPiece.scoredOf, Subword.pieceWord, "wp_np"),
+          Seq("word"), "left")
       // universe flags replicate each apply's word filter + inner join:
-      // both BPEs see every non-empty word; unigram sees length
-      // 1..MaxWordLen words its Viterbi segmented (scored-table hit);
-      // WordPiece the same minus '#'-bearing words.
-      val uniOk = col("uni_np").isNotNull &&
-        length(col("word")).between(1, Unigram.MaxWordLen)
-      val wpOk = col("wp_np").isNotNull &&
-        length(col("word")).between(1, Unigram.MaxWordLen) &&
-        !col("word").contains("#")
-      def csum(flag: org.apache.spark.sql.Column,
-          v: org.apache.spark.sql.Column) = U.lng(sum(when(flag, v)))
+      // both BPEs see every word; unigram and WordPiece see the words of
+      // their universe that their scorer kept (scored-table hit).
+      val uniOk = col("uni_np").isNotNull && Subword.boundedWord
+      val wpOk = col("wp_np").isNotNull && Subword.pieceWord
+      def csum(flag: Column, v: Column) = U.lng(sum(when(flag, v)))
       val a = vocab.agg(
-        U.lng(sum(col("cnt"))).as("bpe_w"),
-        U.lng(sum(col("cnt") * col("bpe_t"))).as("bpe_t"),
-        U.lng(sum(col("cnt") * col("wlen"))).as("bpe_c"),
-        U.lng(sum(col("cnt") * col("bb_t"))).as("bb_t"),
-        U.lng(sum(col("cnt") * col("wbytes"))).as("bb_c"),
-        csum(uniOk, col("cnt")).as("uni_w"),
-        csum(uniOk, col("cnt") * col("uni_np")).as("uni_t"),
-        csum(uniOk, col("cnt") * col("wlen")).as("uni_c"),
-        csum(wpOk, col("cnt")).as("wp_w"),
-        csum(wpOk, col("cnt") * col("wp_np")).as("wp_t"),
-        csum(wpOk, col("cnt") * col("wlen")).as("wp_c"))
+        U.lng(sum(col("freq"))).as("bpe_w"),
+        U.lng(sum(col("freq") * col("bpe_t"))).as("bpe_t"),
+        U.lng(sum(col("freq") * col("wlen"))).as("bpe_c"),
+        U.lng(sum(col("freq") * col("bb_t"))).as("bb_t"),
+        U.lng(sum(col("freq") * col("wbytes"))).as("bb_c"),
+        csum(uniOk, col("freq")).as("uni_w"),
+        csum(uniOk, col("freq") * col("uni_np")).as("uni_t"),
+        csum(uniOk, col("freq") * col("wlen")).as("uni_c"),
+        csum(wpOk, col("freq")).as("wp_w"),
+        csum(wpOk, col("freq") * col("wp_np")).as("wp_t"),
+        csum(wpOk, col("freq") * col("wlen")).as("wp_c"))
       a.select(explode(array(
           struct(lit("bpe").as("tokenizer"), col("bpe_w").as("n_words"),
             col("bpe_t").as("n_tokens"), col("bpe_c").as("n_chars")),
@@ -122,50 +95,30 @@ object TokenizerCompare {
   /** Dynamic: composes the four trained-model replays once all have
     * materialized (graft.Verify's run-queries-then-dump order
     * guarantees it — the compare query itself trains all four). */
-  def oracles: Map[String, String] =
-    (Bpe.applyOracleSqlCurrent, ByteBpe.applyOracleSqlCurrent,
-      Unigram.applyOracleSqlCurrent,
-      WordPiece.applyOracleSqlCurrent) match {
-      case (Some(b), Some(bb), Some(u), Some(wp)) => Map(
-        "vocab_compare_tokenizers" ->
-          s"""SELECT tokenizer, n_words, n_tokens, n_chars,
-             |  round(CAST(n_tokens AS DOUBLE) / n_words * 1000000)
-             |    / 1000000 AS tokens_per_word,
-             |  round(CAST(n_chars AS DOUBLE) / n_tokens * 1000000)
-             |    / 1000000 AS chars_per_token
-             |FROM (
-             |  SELECT 'bpe' AS tokenizer,
-             |    CAST(sum(n_words) AS BIGINT) AS n_words,
-             |    CAST(sum(n_bpe_tokens) AS BIGINT) AS n_tokens,
-             |    CAST(sum(n_chars) AS BIGINT) AS n_chars
-             |  FROM (
-             |$b
-             |  ) bpe_rows
-             |  UNION ALL
-             |  SELECT 'bytebpe' AS tokenizer,
-             |    CAST(sum(n_words) AS BIGINT) AS n_words,
-             |    CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
-             |    CAST(sum(n_bytes) AS BIGINT) AS n_chars
-             |  FROM (
-             |$bb
-             |  ) bytebpe_rows
-             |  UNION ALL
-             |  SELECT 'unigram' AS tokenizer,
-             |    CAST(sum(n_words) AS BIGINT) AS n_words,
-             |    CAST(sum(n_pieces) AS BIGINT) AS n_tokens,
-             |    CAST(sum(n_chars) AS BIGINT) AS n_chars
-             |  FROM (
-             |$u
-             |  ) uni_rows
-             |  UNION ALL
-             |  SELECT 'wordpiece' AS tokenizer,
-             |    CAST(sum(n_words) AS BIGINT) AS n_words,
-             |    CAST(sum(n_pieces) AS BIGINT) AS n_tokens,
-             |    CAST(sum(n_chars) AS BIGINT) AS n_chars
-             |  FROM (
-             |$wp
-             |  ) wp_rows)
-             |ORDER BY tokenizer""".stripMargin)
-      case _ => Map.empty
-    }
+  def oracles: Map[String, String] = {
+    // row → (its apply's replay, token column, char column, alias)
+    val rows = Seq(
+      ("bpe", Bpe.applyOracleSqlCurrent, "n_bpe_tokens", "n_chars", "bpe"),
+      ("bytebpe", ByteBpe.applyOracleSqlCurrent, "n_tokens", "n_bytes",
+        "bytebpe"),
+      ("unigram", Unigram.applyOracleSqlCurrent, "n_pieces", "n_chars", "uni"),
+      ("wordpiece", WordPiece.applyOracleSqlCurrent, "n_pieces", "n_chars",
+        "wp"))
+    if (rows.exists(_._2.isEmpty)) Map.empty
+    else Map("vocab_compare_tokenizers" -> (
+      s"""SELECT tokenizer, n_words, n_tokens, n_chars,
+         |  round(CAST(n_tokens AS DOUBLE) / n_words * 1000000)
+         |    / 1000000 AS tokens_per_word,
+         |  round(CAST(n_chars AS DOUBLE) / n_tokens * 1000000)
+         |    / 1000000 AS chars_per_token
+         |FROM (
+         |""".stripMargin + rows.map { case (t, sql, toks, chars, alias) =>
+        s"""  SELECT '$t' AS tokenizer,
+           |    CAST(sum(n_words) AS BIGINT) AS n_words,
+           |    CAST(sum($toks) AS BIGINT) AS n_tokens,
+           |    CAST(sum($chars) AS BIGINT) AS n_chars
+           |  FROM (
+           |""".stripMargin + sql.get.stripMargin + s"\n  ) ${alias}_rows"
+      }.mkString("\n  UNION ALL\n") + ")\nORDER BY tokenizer"))
+  }
 }

@@ -3,7 +3,8 @@ package graft.functions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Tables, U}
+import graft.U
+import Subword.MaxWordLen
 
 /** Unigram-LM subword tokenizer (the SentencePiece family) — the other
   * mainstream tokenizer next to BPE ([[Bpe]]): pieces carry log
@@ -26,30 +27,19 @@ import graft.{Tables, U}
   *  4. after [[EmIters]] rounds, prune to [[VocabTarget]] pieces by
   *     (count desc, piece asc), chars always kept, probs renormalized.
   *
-  * Scale posture: the word table is VOCABULARY-scaled (Heaps' law), the
-  * E-step is embarrassingly parallel over it, and every driver collect
-  * is piece-table-sized by construction — there is no cap/fast-path
-  * split to maintain (contrast [[Bpe]], whose merge loop is inherently
-  * sequential). At 100 TB the same code runs with the word table as a
-  * persisted aggregate.
+  * Scale posture: the word table is VOCABULARY-scaled, the E-step is
+  * embarrassingly parallel over it, and every driver collect is
+  * piece-table-sized, so no driver/distributed split is needed.
   *
-  * Determinism/oracle: piece counts are exact longs; log-probs are
-  * doubles derived from them identically everywhere; the apply oracle
-  * replays the TRAINED model as SQL literals (shortest-round-trip
-  * doubles) and reruns the exact Viterbi DP in DuckDB as unrolled
-  * MATERIALIZED stages — max-logprob then min-pieces per position, the
-  * same two-level tie rule the Scala kernel uses, so (logprob,
-  * n_pieces) are bit-identical. (The IVF/PQ trained-model-replay
-  * pattern; the trainer itself is pinned by UnigramSpec against a
-  * brute-force reference.)
+  * Oracle: the TRAINED model replays as SQL literals (shortest
+  * round-trip doubles) and DuckDB reruns the exact Viterbi DP as
+  * unrolled MATERIALIZED stages with the kernel's two-level tie rule,
+  * so (logprob, n_pieces) are bit-identical; UnigramSpec pins the
+  * kernel against a brute-force reference.
   */
 object Unigram {
   /** Longest piece considered (SentencePiece default regime). */
   val MaxPiece = 8
-  /** Words longer than this are excluded from the tokenizer contract
-    * (both at train and apply, both engines): they are URLs/garbage in
-    * real corpora and the oracle DP unrolls one stage per character. */
-  val MaxWordLen = 24
   /** Seed candidate pieces kept after substring counting. */
   val SeedTarget = 4096
   /** Final vocabulary size (plus any single chars beyond it). */
@@ -57,22 +47,7 @@ object Unigram {
   /** Hard-EM rounds. */
   val EmIters = 2
 
-  private val modelCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), Seq[(String, Double)]]()
-
-  /** Last model served — the apply/segment oracles replay it as
-    * literals (graft.Verify dumps oracle SQL AFTER running queries, so
-    * by dump time this holds the verified dataset's model). */
-  @volatile private var lastModel: Option[Seq[(String, Double)]] = None
-
-  /** Unicode CODE POINTS of `w` — the indexing unit of every position
-    * in this object (ADVICE r14): Spark's `length()` filters and the
-    * DuckDB oracle's `substr`/`length` both count code points, so a
-    * UTF-16 code-unit kernel would segment non-BMP words (emoji)
-    * differently from both and could split surrogate pairs into
-    * invalid pieces. */
-  private[graft] def codePoints(w: String): Array[Int] =
-    w.codePoints().toArray
+  private val Model = new Subword.Kind[Seq[(String, Double)]]("unigram")
 
   private def cpSub(c: Array[Int], from: Int, until: Int): String =
     new String(c, from, until - from)
@@ -87,7 +62,7 @@ object Unigram {
     * corpus words — the seed keeps every char). */
   private[graft] def viterbi(w: String, lp: collection.Map[String, Double])
       : Option[(Double, Int, List[String])] = {
-    val c = codePoints(w)
+    val c = Subword.codePoints(w)
     val n = c.length
     // dp(k): best (logprob, pieces, backpointer start) covering c[0,k)
     val best = new Array[Double](n + 1)
@@ -124,30 +99,19 @@ object Unigram {
     }
   }
 
-  /** Distinct qualifying words of the corpus with frequencies. */
-  private def wordTable(s: SparkSession, d: String): DataFrame =
-    U.fan(Tables.t(s, d, "documents").select(col("text")))
-      .select(explode(split(lower(col("text")), " ")).as("word"))
-      .filter(length(col("word")).between(1, MaxWordLen))
-      .groupBy("word").agg(count(lit(1)).as("freq"))
-
-  def model(s: SparkSession, d: String): Seq[(String, Double)] = {
-    val m = modelCache.computeIfAbsent(
-      (java.nio.file.Paths.get(d).toAbsolutePath.toString,
-        U.dirSignature(java.nio.file.Paths.get(d, "documents.parquet"))),
-      _ => train(s, d))
-    lastModel = Some(m)
-    m
-  }
+  /** Piece log-probs of a dataset, memoized. */
+  def model(s: SparkSession, d: String): Seq[(String, Double)] =
+    Subword.model(Model, d)(train(s, d))
 
   private def train(s: SparkSession, d: String): Seq[(String, Double)] = {
     val sess = s; import sess.implicits._
-    val words = wordTable(s, d).as[(String, Long)].persist()
+    val words = Subword.words(s, d, Subword.boundedWord).as[(String, Long)]
+      .persist()
     // 1. seed: distributed substring counting (vocab × ≤len·MaxPiece
     // emissions), top SeedTarget by count·length with a total (piece)
     // tie order, plus every character with its true count
     val subs = words.flatMap { case (w, f) =>
-      val c = codePoints(w) // code-point units, like the DP (ADVICE r14)
+      val c = Subword.codePoints(w) // code-point units, like the DP
       for {
         st <- 0 until c.length
         en <- (st + 1) to math.min(st + MaxPiece, c.length)
@@ -200,18 +164,16 @@ object Unigram {
     * the memoized model — the shared core of both registered queries.
     * Distinct words are vocabulary-bounded, so the result broadcasts. */
   private[functions] def scoredWords(s: SparkSession, d: String): DataFrame =
-    scoredOf(s, d, wordTable(s, d).select("word"))
+    scoredOf(s, d, Subword.words(s, d, Subword.boundedWord).select("word"))
 
   /** Viterbi-score an explicit distinct-word table under the trained
     * model — the seam [[TokenizerCompare]] uses to feed all tokenizers
-    * from ONE shared corpus scan instead of re-deriving this object's
-    * [[wordTable]] (r18). Callers must pass exactly the qualifying-word
-    * universe ([[wordTable]]'s filter) for apply-identical results. */
+    * from ONE shared corpus scan, filtered by the same
+    * [[Subword.boundedWord]] predicate. */
   private[functions] def scoredOf(s: SparkSession, d: String,
       words: DataFrame): DataFrame = {
     val sess = s; import sess.implicits._
-    val probs = model(s, d).toMap
-    val bc = s.sparkContext.broadcast(probs)
+    val bc = s.sparkContext.broadcast(model(s, d).toMap)
     words.as[String]
       .mapPartitions { it =>
         val lp = bc.value
@@ -239,11 +201,7 @@ object Unigram {
     // decimal bridge so it is partition-order invariant.
     "vocab_unigram_apply" -> ((s, d) => {
       val scored = scoredWords(s, d)
-      val wc = U.fan(Tables.t(s, d, "documents")
-          .select(col("doc_id"), col("text")))
-        .select(col("doc_id"),
-          explode(split(lower(col("text")), " ")).as("word"))
-        .filter(length(col("word")).between(1, MaxWordLen))
+      val wc = Subword.instances(s, d, Subword.boundedWord, "doc_id")
         .groupBy("doc_id", "word").agg(count(lit(1)).as("cnt"))
       wc.join(broadcast(scored), "word")
         .groupBy("doc_id")
@@ -264,9 +222,8 @@ object Unigram {
     * up to MaxPiece later stages, and plain CTE inlining would expand
     * the tree exponentially (the XxhSqlOracle lesson). */
   private def dpSql(m: Seq[(String, Double)]): String = {
-    def esc(x: String) = x.replace("'", "''")
     val values = m.map { case (p, l) =>
-      s"('${esc(p)}', CAST($l AS DOUBLE))"
+      s"('${Subword.Sql.esc(p)}', CAST($l AS DOUBLE))"
     }.mkString(",\n    ")
     val stages = (1 to MaxWordLen).map { k =>
       s"""sc$k AS MATERIALIZED (
@@ -312,30 +269,28 @@ object Unigram {
   /** Current apply oracle, exposed for [[TokenizerCompare]]'s composed
     * replay (None until the model has trained this process). */
   private[functions] def applyOracleSqlCurrent: Option[String] =
-    lastModel.map(applyOracleSql)
+    Subword.last(Model).map(applyOracleSql)
 
-  def oracles: Map[String, String] = lastModel match {
-    case None => Map.empty
-    case Some(m) =>
-      Map(
-        "vocab_unigram_segment" ->
-          s"""WITH ${dpSql(m)}
-             |SELECT word, CAST(wnp AS BIGINT) AS n_pieces,
-             |  round(wlp * 1000000) / 1000000 AS word_logprob
-             |FROM scored ORDER BY word""".stripMargin,
-        "vocab_unigram_apply" -> applyOracleSql(m))
-  }
+  def oracles: Map[String, String] = Subword.last(Model).toSeq.flatMap { m =>
+    Seq(
+      "vocab_unigram_segment" ->
+        s"""WITH ${dpSql(m)}
+           |SELECT word, CAST(wnp AS BIGINT) AS n_pieces,
+           |  round(wlp * 1000000) / 1000000 AS word_logprob
+           |FROM scored ORDER BY word""".stripMargin,
+      "vocab_unigram_apply" -> applyOracleSql(m))
+  }.toMap
 
   private def applyOracleSql(m: Seq[(String, Double)]): String =
     s"""WITH ${dpSql(m)}
-             |SELECT t.doc_id,
-             |  CAST(sum(t.cnt) AS BIGINT) AS n_words,
-             |  CAST(sum(t.cnt * sc.wnp) AS BIGINT) AS n_pieces,
-             |  CAST(sum(t.cnt * length(t.word)) AS BIGINT) AS n_chars,
-             |  round(CAST(sum(CAST(round(
-             |      (round(sc.wlp * 1000000) / 1000000) * t.cnt * 1000000
-             |    ) / 1000000 AS DECIMAL(18,6))) AS DOUBLE) * 1000000)
-             |    / 1000000 AS unigram_logprob
-             |FROM tw t JOIN scored sc ON sc.word = t.word
-             |GROUP BY t.doc_id ORDER BY t.doc_id""".stripMargin
+       |SELECT t.doc_id,
+       |  CAST(sum(t.cnt) AS BIGINT) AS n_words,
+       |  CAST(sum(t.cnt * sc.wnp) AS BIGINT) AS n_pieces,
+       |  CAST(sum(t.cnt * length(t.word)) AS BIGINT) AS n_chars,
+       |  round(CAST(sum(CAST(round(
+       |      (round(sc.wlp * 1000000) / 1000000) * t.cnt * 1000000
+       |    ) / 1000000 AS DECIMAL(18,6))) AS DOUBLE) * 1000000)
+       |    / 1000000 AS unigram_logprob
+       |FROM tw t JOIN scored sc ON sc.word = t.word
+       |GROUP BY t.doc_id ORDER BY t.doc_id""".stripMargin
 }

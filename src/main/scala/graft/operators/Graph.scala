@@ -613,7 +613,7 @@ object Graph {
       val perUser = Window.partitionBy("user_id")
         .orderBy(U.tsUs(col("ts")), col("event_id"))
       // cap+1 limit makes the guard probe and the collect ONE job (the
-      // Bpe.DriverVocabCap pattern, r18): the limit bounds what the
+      // Subword.DriverVocabCap pattern, r18): the limit bounds what the
       // driver materializes at cap+1 rows — the same OOM protection the
       // old persist + distributed-count + collect + unpersist spelling
       // bought with three extra scheduler round-trips — and ≤cap rows
@@ -680,7 +680,7 @@ object Graph {
       val perUser = Window.partitionBy("user_id")
         .orderBy(U.tsUs(col("ts")), col("event_id"))
       // cap+1 limit makes the size probe and the collect ONE job (the
-      // Bpe.DriverVocabCap pattern, r18 — replaces persist + count +
+      // Subword.DriverVocabCap pattern, r18 — replaces persist + count +
       // collect + unpersist, three scheduler round-trips on a
       // ≤|types|²-bounded table): ≤cap rows back proves the guard.
       val cap = 100000

@@ -10,20 +10,16 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Ordered BPE merge application: `bpe_merge(symbols, rules)` applies
-  * each rule `"a b"` (two space-separated symbols) in sequence to the
-  * symbol array, replacing adjacent (a, b) pairs with the concatenation
-  * `ab` greedily left-to-right non-overlapping — the classic BPE apply
-  * step (Sennrich et al. 2016). A rule may carry an explicit merged
-  * spelling as a third field `"a b m"` (byte-level BPE needs it:
-  * decimal byte symbols join with `_` because plain concatenation is
-  * ambiguous — `[1,11]` and `[11,1]` both concat to `"111"`); symbols
-  * never contain spaces in either family, so the 3-field form is
-  * unambiguous and the 2-field form keeps its `ab` default. A codegen'd
-  * kernel rather than a lambda chain because the equivalent HOF
-  * composition would be one interpreted `aggregate()` fold PER RULE per
-  * row — on the tokenize path over a corpus, the same
-  * interpreted-lambda bottleneck that motivated [[WordKGrams]] and
-  * [[MinHashSig]].
+  * each rule `"a b m"` in sequence to the symbol array, replacing
+  * adjacent (a, b) pairs with the merged spelling `m` greedily
+  * left-to-right non-overlapping — the classic BPE apply step (Sennrich
+  * et al. 2016). The 2-field form `"a b"` merges to the concatenation
+  * `ab`; the tokenizers ship the 3-field form because byte-level and
+  * WordPiece spellings are not concatenations. Symbols never contain
+  * spaces, so both forms are unambiguous. A codegen'd kernel, not a
+  * lambda chain: the HOF spelling is one interpreted `aggregate()` fold
+  * PER RULE per row (the bottleneck behind [[WordKGrams]] and
+  * [[MinHashSig]]).
   *
   * Null semantics: null symbol array → null result; null RULE entries
   * are skipped; null symbols inside the array never merge (compared by

@@ -12,11 +12,16 @@ class BpeSpec extends SparkSpec {
 
   /** Independent reference BPE trainer (classic dictionary
     * implementation, Sennrich et al. 2016 pseudo-code shape) — driver
-    * maps only, shares no code with the engine path. */
+    * maps only, shares no code with the engine path. Symbols are CODE
+    * POINTS, as Spark and DuckDB split words; ties break in UTF-8 byte
+    * order, as both engines sort strings. */
   private def referenceTrain(wordFreqs: Map[String, Long], nMerges: Int)
       : Seq[(Int, String, String, Long)] = {
     var vocab: Map[Vector[String], Long] =
-      wordFreqs.map { case (w, f) => (w.split("").toVector, f) }
+      wordFreqs.map { case (w, f) =>
+        (w.codePoints().toArray.toVector
+          .map(c => new String(Character.toChars(c))), f)
+      }
     val out = scala.collection.mutable.ArrayBuffer
       .empty[(Int, String, String, Long)]
     var rank = 1
@@ -33,7 +38,10 @@ class BpeSpec extends SparkSpec {
       val eligible = counts.filter(_._2 >= 2)
       if (eligible.isEmpty) done = true
       else {
-        val ((a, b), cnt) = eligible.minBy { case ((x, y), c) => (-c, x, y) }
+        // Latin-1 view of the UTF-8 bytes: String order = unsigned byte order
+        def key(x: String) = new String(x.getBytes("UTF-8"), "ISO-8859-1")
+        val ((a, b), cnt) =
+          eligible.minBy { case ((x, y), c) => (-c, key(x), key(y)) }
         out += ((rank, a, b, cnt))
         vocab = vocab.map { case (syms, f) =>
           val merged = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -52,7 +60,7 @@ class BpeSpec extends SparkSpec {
   }
 
   test("trained merge rules match the independent reference implementation") {
-    functions.Bpe.clearRulesCache()
+    functions.Subword.clear()
     val engine = functions.Bpe.queries("vocab_bpe_train")(spark, sfDir)
       .as[(Int, String, String, Long)].collect().toSeq
     val wordFreqs = Tables.t(spark, sfDir, "documents")
@@ -60,7 +68,7 @@ class BpeSpec extends SparkSpec {
       .filter(length($"w") > 0)
       .groupBy("w").count()
       .as[(String, Long)].collect().toMap
-    val ref = referenceTrain(wordFreqs, functions.Bpe.nMerges)
+    val ref = referenceTrain(wordFreqs, functions.Subword.nMerges)
     assert(engine === ref)
     assert(engine.nonEmpty, "corpus should yield at least one merge")
   }
@@ -103,6 +111,8 @@ class BpeSpec extends SparkSpec {
   }
 
   test("rules memo invalidates when the dataset is rewritten (no stale serve)") {
+    // all four tokenizers serve their models through the one Subword
+    // memo; each row lists what its model learned
     val dir = java.nio.file.Files.createTempDirectory("graft-bpe-memo").toString
     def writeDocs(texts: Seq[String]): Unit =
       texts.zipWithIndex
@@ -110,21 +120,36 @@ class BpeSpec extends SparkSpec {
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$dir/documents.parquet")
-    // corpus A: 'er' dominates → first merge is (e, r)
+    // tokenizer → (learned tokens, the token for "er", the token for "lo")
+    val learned: Seq[(String, () => Set[String], String, String)] = Seq(
+      ("bpe", () => functions.Bpe.trainRules(spark, dir).map(_.merged).toSet,
+        "er", "lo"),
+      ("bytebpe",
+        () => functions.ByteBpe.trainRules(spark, dir).map(_.merged).toSet,
+        "101_114", "108_111"),
+      ("wordpiece",
+        () => functions.WordPiece.model(spark, dir)._1.map(_.merged).toSet,
+        "er", "lo"),
+      ("unigram", () => functions.Unigram.model(spark, dir).map(_._1).toSet,
+        "er", "lo"))
+    // corpus A: 'er' dominates
     writeDocs(Seq.fill(5)("er er er er"))
-    val r1 = functions.Bpe.trainRules(spark, dir)
-    assert(r1.head._2 == "e" && r1.head._3 == "r")
+    learned.foreach { case (t, model, er, lo) =>
+      val m = model()
+      assert(m(er) && !m(lo), s"$t on corpus A: $m")
+    }
     // rewrite with a different corpus: 'lo' dominates
     writeDocs(Seq.fill(5)("lo lo lo lo"))
-    val r2 = functions.Bpe.trainRules(spark, dir)
-    assert(r2.head._2 == "l" && r2.head._3 == "o",
-      s"stale rules served after rewrite: $r2")
+    learned.foreach { case (t, model, er, lo) =>
+      val m = model()
+      assert(m(lo) && !m(er), s"stale $t model served after rewrite: $m")
+    }
   }
 
   test("apply: tokens round-trip to the original words, compression holds") {
-    functions.Bpe.clearRulesCache()
+    functions.Subword.clear()
     plans.BpeMerge.register(spark)
-    val rules = functions.Bpe.trainRules(spark, sfDir).map(r => s"${r._2} ${r._3}")
+    val rules = functions.Bpe.trainRules(spark, sfDir).map(_.rule)
     val words = Tables.t(spark, sfDir, "documents").limit(200)
       .select(explode(split(lower($"text"), " ")).as("word"))
       .filter(length($"word") > 0)
@@ -145,12 +170,15 @@ class BpeSpec extends SparkSpec {
   test("driver fast path and distributed trainer are rule-for-rule " +
     "identical on a planted corpus (the DriverVocabCap crossover)") {
     // planted vocab with repeated-pair words, ties, and single-char
-    // words — the edge shapes the merge loop must agree on
+    // words — the edge shapes the merge loop must agree on — plus
+    // non-BMP words: the driver must seed by code point (not UTF-16
+    // unit) and break the (😀,😀) vs (ｱ,ｱ) count tie in UTF-8 byte
+    // order, as Spark does
     val wf = Seq(("aaa", 5L), ("aab", 5L), ("banana", 3L), ("bandana", 2L),
-      ("x", 9L), ("nan", 4L), ("ana", 4L))
+      ("x", 9L), ("nan", 4L), ("ana", 4L), ("😀😀", 5L), ("ｱｱ", 5L))
     val words = wf.toDF("word", "freq")
-    val dist = functions.Bpe.trainDistributed(words)
-    val local = functions.Bpe.trainLocal(wf)
+    val dist = functions.Subword.trainDistributed(functions.Bpe.merges, words)
+    val local = functions.Subword.trainLocal(functions.Bpe.merges, wf)
     assert(dist === local)
     assert(dist.nonEmpty)
   }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import functions.ByteBpe
+import functions.{ByteBpe, Subword}
 
 /** Byte-level BPE (VERDICT r15 item 5): UTF-8 byte seeding pinned on
   * multibyte inputs (JVM twin AND the codegen expression path), the
@@ -66,12 +66,15 @@ class ByteBpeSpec extends SparkSpec {
     // pairs: (97,97)=3, (97,98)=2 → rank1 (97,97) cnt 3 → 97_97
     // round 2: [97_97] x3, [97,98] x2 → (97,98)=2 → rank2 97_98
     // round 3: nothing repeats adjacent → stop
-    val r = ByteBpe.trainLocal(Seq(("aa", 3L), ("ab", 2L)))
+    def train(wf: Seq[(String, Long)]) =
+      Subword.trainLocal(ByteBpe.merges, wf)
+        .map(r => (r.rank, r.left, r.right, r.freq))
+    val r = train(Seq(("aa", 3L), ("ab", 2L)))
     assert(r === Seq((1, "97", "97", 3L), (2, "97", "98", 2L)))
     // multibyte: "éé" x2 → [195,169,195,169] x2 — pairs (195,169)=4,
     // (169,195)=2 → rank1 (195,169) cnt 4; then [195_169,195_169] x2
     // → (195_169,195_169)=2 → rank2; then single symbol, stop
-    val m = ByteBpe.trainLocal(Seq(("éé", 2L)))
+    val m = train(Seq(("éé", 2L)))
     assert(m === Seq((1, "195", "169", 4L),
       (2, "195_169", "195_169", 2L)))
   }
@@ -81,8 +84,8 @@ class ByteBpeSpec extends SparkSpec {
     // two disjoint repeated pairs with EQUAL counts; left symbols
     // "100" (from byte 0x64 'd') vs "97" ('a') — lexicographic string
     // order picks the '100' pair first even though 97 < 100 numerically
-    val r = ByteBpe.trainLocal(Seq(("dd", 2L), ("aa", 2L)))
-    assert(r.head._2 === "100" && r.head._3 === "100")
+    val r = Subword.trainLocal(ByteBpe.merges, Seq(("dd", 2L), ("aa", 2L)))
+    assert(r.head.left === "100" && r.head.right === "100")
   }
 
   test("driver fast path and distributed trainer are rule-for-rule " +
@@ -90,8 +93,8 @@ class ByteBpeSpec extends SparkSpec {
     val wf = Seq(("the", 5L), ("then", 3L), ("café", 4L), ("cafés", 2L),
       ("déjà", 3L), ("x", 9L), ("éé", 2L))
     val words = wf.toDF("word", "freq")
-    val dist = ByteBpe.trainDistributed(words)
-    val local = ByteBpe.trainLocal(wf)
+    val dist = Subword.trainDistributed(ByteBpe.merges, words)
+    val local = Subword.trainLocal(ByteBpe.merges, wf)
     assert(dist.nonEmpty)
     assert(dist === local)
   }
@@ -99,8 +102,8 @@ class ByteBpeSpec extends SparkSpec {
   test("registered queries on sf0.001: apply accounting consistent, " +
     "no-UNK property (every word encodable), merges compress") {
     val rules = ByteBpe.trainRules(spark, sfDir)
-    assert(rules.nonEmpty && rules.size <= ByteBpe.nMerges)
-    assert(rules.map(_._1) === (1 to rules.size))
+    assert(rules.nonEmpty && rules.size <= Subword.nMerges)
+    assert(rules.map(_.rank) === (1 to rules.size))
     val ap = SparkEntry.queries("vocab_bytebpe_apply")(spark, sfDir)
       .collect()
     assert(ap.nonEmpty)

@@ -75,7 +75,7 @@ class UnigramSpec extends SparkSpec {
     "non-BMP chars segment whole and pieces are valid strings") {
     val emoji = new String(Character.toChars(0x1F600)) // 😀, 2 UTF-16 units
     val w = s"a${emoji}b"
-    assert(Unigram.codePoints(w).length === 3)
+    assert(functions.Subword.codePoints(w).length === 3)
     val lp = Map("a" -> -1.0, "b" -> -1.0, emoji -> -2.0)
     // a UTF-16 kernel would need 4 positions and try to split the
     // surrogate pair; the code-point DP sees exactly 3 pieces
@@ -99,7 +99,7 @@ class UnigramSpec extends SparkSpec {
     // every qualifying corpus word segments (char coverage invariant)
     val words = Tables.t(spark, sfDir, "documents")
       .select(explode(split(lower(col("text")), " ")).as("w"))
-      .filter(length(col("w")).between(1, Unigram.MaxWordLen))
+      .filter(length(col("w")).between(1, functions.Subword.MaxWordLen))
       .select("w").distinct().collect().map(_.getString(0))
     assert(words.nonEmpty)
     words.foreach { w =>
@@ -130,7 +130,7 @@ class UnigramSpec extends SparkSpec {
       .select(col("doc_id"), col("text")).limit(1).collect()
     val (id0, text0) = (docs(0).getLong(0), docs(0).getString(1))
     val ws = text0.toLowerCase.split(" ")
-      .filter(w => w.nonEmpty && w.length <= Unigram.MaxWordLen)
+      .filter(w => w.nonEmpty && w.length <= functions.Subword.MaxWordLen)
     val expNp = ws.map(w => seg(w)._1).sum
     val row = app.find(_.getLong(0) == id0).get
     assert(row.getLong(1) === ws.length.toLong)

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import functions.WordPiece
+import functions.{Subword, WordPiece}
 
 /** WordPiece tokenizer (VERDICT r14 item 5): the trainer pinned against
   * an independent brute-force reference, the longest-match apply kernel
@@ -79,50 +79,49 @@ class WordPieceSpec extends SparkSpec {
     // sym: a=5, ##a=3, ##b=5; pairs: (a,##a)=3, (##a,##b)=3, (a,##b)=2
     // scores: 3/(5·3)=0.2, 3/(3·5)=0.2, 2/(5·5)=0.08
     // tie at 0.2 → lexical: ("##a","##b") < ("a","##a") → merge ##ab
-    val r1 = WordPiece.trainLocal(Seq(("aab", 3L), ("ab", 2L)))
+    val r1 = Subword.trainLocal(WordPiece.merges, Seq(("aab", 3L), ("ab", 2L)))
     assert(r1.nonEmpty)
-    val (rk, a, b, m, pc, sc) = r1.head
+    val Subword.Merge(rk, a, b, m, pc, sc) = r1.head
     assert((rk, a, b, m, pc) === (1, "##a", "##b", "##ab", 3L))
     assert(math.abs(sc - 0.2) < 1e-12)
     // round 2: [a,##ab]×3, [a,##b]×2 — sym a=5, ##ab=3, ##b=2;
     // pairs (a,##ab)=3 → 3/15=0.2, (a,##b)=2 → 2/10=0.2;
     // lexical: ("a","##ab") < ("a","##b") → merge "aab"
-    assert(r1(1)._1 === 2)
-    assert((r1(1)._2, r1(1)._3, r1(1)._4, r1(1)._5) ===
+    assert(r1(1).rank === 2)
+    assert((r1(1).left, r1(1).right, r1(1).merged, r1(1).freq) ===
       ("a", "##ab", "aab", 3L))
     // pc floor: remaining pair (a,##b)=2 still eligible → rank 3 "ab";
     // after that nothing repeats
-    assert((r1(2)._2, r1(2)._3, r1(2)._4, r1(2)._5) ===
+    assert((r1(2).left, r1(2).right, r1(2).merged, r1(2).freq) ===
       ("a", "##b", "ab", 2L))
     assert(r1.size === 3)
   }
 
   test("driver fast path and distributed trainer are rule-for-rule " +
     "identical on a planted corpus") {
+    // non-BMP words: the distributed loop seeds through the Column twin
+    // of encode, which must split by code point too
     val wf = Seq(("aaa", 5L), ("aab", 5L), ("banana", 3L),
-      ("bandana", 2L), ("x", 9L), ("nan", 4L), ("ana", 4L))
+      ("bandana", 2L), ("x", 9L), ("nan", 4L), ("ana", 4L),
+      ("😀😀", 5L), ("ｱｱ", 5L))
     val words = wf.toDF("word", "freq")
-    val dist = WordPiece.trainDistributed(words)
-    val local = WordPiece.trainLocal(wf)
+    val dist = Subword.trainDistributed(WordPiece.merges, words)
+    val local = Subword.trainLocal(WordPiece.merges, wf)
     assert(dist.nonEmpty)
-    assert(dist.map(r => (r._1, r._2, r._3, r._4, r._5)) ===
-      local.map(r => (r._1, r._2, r._3, r._4, r._5)))
-    // scores are the same exact long ratios
-    dist.zip(local).foreach { case (dr, lr) =>
-      assert(dr._6 === lr._6)
-    }
+    // Merge equality includes the score: the same exact long ratios
+    assert(dist === local)
   }
 
   test("model invariants on sf0.001: alphabet complete (both forms), " +
     "every universe word tokenizes without UNK surprise accounting") {
     val (rules, vocab) = WordPiece.model(spark, sfDir)
-    assert(rules.size <= WordPiece.nMerges)
-    assert(rules.map(_._1) === (1 to rules.size))
+    assert(rules.size <= Subword.nMerges)
+    assert(rules.map(_.rank) === (1 to rules.size))
     // every merge product is in the vocabulary
-    rules.foreach(r => assert(vocab.contains(r._4), r._4))
+    rules.foreach(r => assert(vocab.contains(r.merged), r.merged))
     val words = Tables.t(spark, sfDir, "documents")
       .select(explode(split(lower(col("text")), " ")).as("w"))
-      .filter(length(col("w")).between(1, functions.Unigram.MaxWordLen) &&
+      .filter(length(col("w")).between(1, Subword.MaxWordLen) &&
         !col("w").contains("#"))
       .select("w").distinct().as[String].collect()
     assert(words.nonEmpty)
@@ -131,7 +130,7 @@ class WordPieceSpec extends SparkSpec {
     words.foreach { w =>
       val np = WordPiece.wpPieces(w, vocab)
       assert(np.isDefined, s"universe word went UNK: $w")
-      assert(np.get <= functions.Unigram.codePoints(w).length)
+      assert(np.get <= Subword.codePoints(w).length)
     }
   }
 
