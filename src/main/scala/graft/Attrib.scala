@@ -11,7 +11,8 @@ import scala.collection.mutable
   * was unattributable precisely because nothing recorded whether the
   * driver fast path or the distributed fixpoint executed. Operators
   * with guarded fast paths ([[dedup.Dedup.canonicalResolve]],
-  * [[operators.Graph]]) note their chosen path + iteration count here;
+  * [[operators.Graph]]) note their chosen path + iteration count here,
+  * and [[Artifacts]] notes whether each artifact was reused or trained;
   * the notes are advisory instrumentation, never part of any query's
   * result contract.
   *

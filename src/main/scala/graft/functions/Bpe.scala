@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.U
+import graft.{Artifacts, U}
 import Subword.Merge
 
 /** BPE subword tokenizer (Sennrich et al. 2016, the
@@ -24,11 +24,11 @@ object Bpe {
   val merges: Subword.Merges = Subword.Merges("bpe", Subword.chars,
     Subword.charsCol, _ + _, scored = false)
 
-  private val Model = new Subword.Kind[Seq[Merge]]("bpe")
+  private val Model = new Artifacts.Kind[Seq[Merge]]("bpe", "documents")
 
   /** Learned merge rules of a dataset, memoized. */
   def trainRules(s: SparkSession, d: String): Seq[Merge] =
-    Subword.model(Model, d)(
+    Artifacts.get(Model, d)(
       Subword.trainMerges(merges, Subword.words(s, d, Subword.anyWord)))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -83,7 +83,7 @@ object Bpe {
   /** Current apply oracle, exposed for [[TokenizerCompare]]'s composed
     * replay (None until rules have trained this process). */
   private[functions] def applyOracleSqlCurrent: Option[String] =
-    Subword.last(Model).map(applyOracleSqlFor)
+    Artifacts.last(Model).map(applyOracleSqlFor)
 
   def oracles: Map[String, String] =
     Map("vocab_bpe_train" -> trainOracleSql) ++

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.U
+import graft.{Artifacts, U}
 import Subword.Merge
 
 /** Byte-level BPE tokenizer — the GPT-2/tiktoken family (Radford et al.
@@ -42,7 +42,7 @@ object ByteBpe {
   val merges: Subword.Merges = Subword.Merges("bytebpe", byteSymsLocal,
     byteSyms, _ + "_" + _, scored = false)
 
-  private val Model = new Subword.Kind[Seq[Merge]]("bytebpe")
+  private val Model = new Artifacts.Kind[Seq[Merge]]("bytebpe", "documents")
 
   /** Inverse of the tokenization (tiktoken `decode`): the word's bytes
     * are the `_`-flattened token spellings in order; each decimal
@@ -56,7 +56,7 @@ object ByteBpe {
 
   /** Learned merge rules of a dataset, memoized. */
   def trainRules(s: SparkSession, d: String): Seq[Merge] =
-    Subword.model(Model, d)(
+    Artifacts.get(Model, d)(
       Subword.trainMerges(merges, Subword.words(s, d, Subword.anyWord)))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -165,11 +165,11 @@ object ByteBpe {
   /** Current apply oracle, exposed for [[TokenizerCompare]]'s composed
     * replay (None until rules have trained this process). */
   private[functions] def applyOracleSqlCurrent: Option[String] =
-    Subword.last(Model).map(applyOracleSqlFor)
+    Artifacts.last(Model).map(applyOracleSqlFor)
 
   def oracles: Map[String, String] =
     Map("vocab_bytebpe_train" -> trainOracleSql) ++
-      Subword.last(Model).toSeq.flatMap(rs => Seq(
+      Artifacts.last(Model).toSeq.flatMap(rs => Seq(
         "vocab_bytebpe_apply" -> applyOracleSqlFor(rs),
         "vocab_bytebpe_decode" -> decodeOracleSqlFor(rs)))
 }

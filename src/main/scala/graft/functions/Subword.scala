@@ -1,9 +1,6 @@
 package graft.functions
 
 import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
-import java.nio.file.Paths
-import java.util.concurrent.ConcurrentHashMap
-
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -16,8 +13,9 @@ import graft.{Attrib, Tables, U}
   * word table and its qualifying-word predicates (so train, apply and
   * compare universes cannot drift apart); the greedy merge trainer of
   * the merge family — one driver loop and one distributed loop behind
-  * one guard, parameterised by [[Merges]]; the model memo; the
-  * BPE-family apply; and the merge-family oracle string builders.
+  * one guard, parameterised by [[Merges]]; the BPE-family apply; and
+  * the merge-family oracle string builders. Trained models are
+  * memoized per dataset through [[graft.Artifacts]].
   *
   * Training iterates on the WORD-FREQUENCY vocabulary, not the corpus:
   * one corpus scan builds (word, freq), and every merge round costs
@@ -232,34 +230,6 @@ object Subword {
   /** Merge rules for a (word, freq) table through the guard. */
   def trainMerges(m: Merges, words: DataFrame): Seq[Merge] =
     guarded(m.tag, words)(trainLocal(m, _), trainDistributed(m, words))
-
-  /** A memoized model kind; its name keys the memo. */
-  final class Kind[M <: AnyRef](val name: String)
-
-  private val memo = new ConcurrentHashMap[(String, String, Long), AnyRef]()
-  private val served = new ConcurrentHashMap[String, AnyRef]()
-
-  /** The `kind` model of dataset `d`, trained once per (kind, absolute
-    * path, `documents.parquet` signature) — training is a property of
-    * the DATASET, not of each query — and recorded as the kind's last
-    * served model. One memo per JVM, no eviction. */
-  def model[M <: AnyRef](kind: Kind[M], d: String)(train: => M): M = {
-    val m = memo.computeIfAbsent(
-      (kind.name, Paths.get(d).toAbsolutePath.toString,
-        U.dirSignature(Paths.get(d, "documents.parquet"))),
-      _ => train).asInstanceOf[M]
-    served.put(kind.name, m)
-    m
-  }
-
-  /** The last `kind` model served — the apply oracles replay it
-    * (graft.Verify dumps oracle SQL AFTER running the queries, so by
-    * dump time it holds the verified dataset's model). */
-  def last[M <: AnyRef](kind: Kind[M]): Option[M] =
-    Option(served.get(kind.name)).map(_.asInstanceOf[M])
-
-  /** Drop every memoized and last-served model. */
-  def clear(): Unit = { memo.clear(); served.clear() }
 
   /** The BPE-family apply: fanned word instances → crossJoin with the
     * 1-row rules array → `bpe_merge` over `seed(word)` as `toks`,

@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.{Tables, U}
+import graft.{Artifacts, Tables, U}
 import graft.plans.PolyHash64
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -77,12 +77,10 @@ object TextOps {
           .as("chunk"))
   }
 
-  /** Per-JVM memo of the built vocabulary (the
-    * `Similarity.centroidCache` pattern): the vocabulary is a property
-    * of the DATASET, not of each tokenization query, so re-aggregating
-    * the corpus on every apply would dominate the tokenize cost. Keyed
-    * by (absolute path, listing signature) so regenerated data rebuilds
-    * instead of serving stale terms.
+  /** The built vocabulary, memoized through [[graft.Artifacts]]: the
+    * vocabulary is a property of the DATASET, not of each tokenization
+    * query, so re-aggregating the corpus on every apply would dominate
+    * the tokenize cost.
     *
     * The memo holds a CACHED DATAFRAME, never driver rows: the vocab
     * stays executor-resident (this is the persisted-vocab-table shape a
@@ -91,29 +89,18 @@ object TextOps {
     * a distributed count() against the broadcast-sanity cap, checked
     * BEFORE anything could materialize on the driver, so a copy-paste
     * onto a 10^8-term corpus fails loudly instead of OOMing. */
-  private val vocabCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), DataFrame]()
+  private val Vocab = new Artifacts.Kind[DataFrame]("vocab", "documents")
 
-  def clearVocabCache(): Unit = {
-    import scala.jdk.CollectionConverters._
-    vocabCache.values.asScala.foreach(_.unpersist())
-    vocabCache.clear()
-  }
-
-  /** Cached (token_id, term, tf) vocabulary for dataset `d` — see
-    * [[vocabCache]]. */
-  private def vocabDf(s: SparkSession, d: String): DataFrame =
-    vocabCache.computeIfAbsent(
-      (java.nio.file.Paths.get(d).toAbsolutePath.toString,
-        U.dirSignature(java.nio.file.Paths.get(d, "documents.parquet"))),
-      _ => {
-        val df = queries("vocab_build")(s, d).persist()
-        val n = df.count() // distributed; also materializes the cache
-        require(n <= (1L << 20),
-          s"vocabulary has $n terms — beyond the broadcast-sanity cap; " +
-            "persist vocab_build output and shuffle-join the table instead")
-        df
-      })
+  /** Cached (token_id, term, tf) vocabulary for dataset `d`. */
+  private[graft] def vocabDf(s: SparkSession, d: String): DataFrame =
+    Artifacts.get(Vocab, d) {
+      val df = queries("vocab_build")(s, d).persist()
+      val n = df.count() // distributed; also materializes the cache
+      require(n <= (1L << 20),
+        s"vocabulary has $n terms — beyond the broadcast-sanity cap; " +
+          "persist vocab_build output and shuffle-join the table instead")
+      df
+    }
 
   /** Tiny stopword profiles per language — n-gram/stopword heuristic
     * language ID. Deterministic argmax (ties broken by profile order). */

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.U
+import graft.{Artifacts, U}
 import Subword.MaxWordLen
 
 /** Unigram-LM subword tokenizer (the SentencePiece family) — the other
@@ -47,7 +47,8 @@ object Unigram {
   /** Hard-EM rounds. */
   val EmIters = 2
 
-  private val Model = new Subword.Kind[Seq[(String, Double)]]("unigram")
+  private val Model =
+    new Artifacts.Kind[Seq[(String, Double)]]("unigram", "documents")
 
   private def cpSub(c: Array[Int], from: Int, until: Int): String =
     new String(c, from, until - from)
@@ -101,7 +102,7 @@ object Unigram {
 
   /** Piece log-probs of a dataset, memoized. */
   def model(s: SparkSession, d: String): Seq[(String, Double)] =
-    Subword.model(Model, d)(train(s, d))
+    Artifacts.get(Model, d)(train(s, d))
 
   private def train(s: SparkSession, d: String): Seq[(String, Double)] = {
     val sess = s; import sess.implicits._
@@ -269,9 +270,9 @@ object Unigram {
   /** Current apply oracle, exposed for [[TokenizerCompare]]'s composed
     * replay (None until the model has trained this process). */
   private[functions] def applyOracleSqlCurrent: Option[String] =
-    Subword.last(Model).map(applyOracleSql)
+    Artifacts.last(Model).map(applyOracleSql)
 
-  def oracles: Map[String, String] = Subword.last(Model).toSeq.flatMap { m =>
+  def oracles: Map[String, String] = Artifacts.last(Model).toSeq.flatMap { m =>
     Seq(
       "vocab_unigram_segment" ->
         s"""WITH ${dpSql(m)}

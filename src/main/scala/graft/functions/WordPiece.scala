@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.U
+import graft.{Artifacts, U}
 import Subword.{Merge, MaxWordLen}
 
 /** WordPiece subword tokenizer — the BERT family next to [[Bpe]] and
@@ -39,14 +39,15 @@ object WordPiece {
     (a, b) => a + stripCont(b), scored = true)
 
   /** (merge rules, final token vocabulary). */
-  private val Model = new Subword.Kind[(Seq[Merge], Set[String])]("wordpiece")
+  private val Model =
+    new Artifacts.Kind[(Seq[Merge], Set[String])]("wordpiece", "documents")
 
   /** Trained model for a dataset: (merge rules, final token vocabulary).
     * The vocabulary is the WordPiece alphabet — BOTH forms (initial and
     * `##`-continuation) of every character seen in the universe — plus
     * every merge product. Memoized. */
   def model(s: SparkSession, d: String): (Seq[Merge], Set[String]) =
-    Subword.model(Model, d) {
+    Artifacts.get(Model, d) {
       val sess = s; import sess.implicits._
       val words = Subword.words(s, d, Subword.pieceWord)
       val (rules, wordSeq) = Subword.guarded(merges.tag, words)(
@@ -253,7 +254,7 @@ object WordPiece {
   /** Current apply oracle, exposed for [[TokenizerCompare]]'s composed
     * replay (None until the model has trained this process). */
   private[functions] def applyOracleSqlCurrent: Option[String] =
-    Subword.last(Model).map(m => applyOracleSqlFor(m._2))
+    Artifacts.last(Model).map(m => applyOracleSqlFor(m._2))
 
   def oracles: Map[String, String] =
     Map("vocab_wordpiece_train" -> trainOracleSql) ++

@@ -1,6 +1,6 @@
 package graft.ml
 
-import graft.{Tables, U}
+import graft.{Artifacts, Tables, U}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -122,15 +122,11 @@ object Gmm {
     } finally f.unpersist()
   }
 
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), Params]()
-  def clearCache(): Unit = cache.clear()
+  private val Model = new Artifacts.Kind[Params]("gmm", "orders")
 
+  /** The fitted mixture of a dataset, memoized. */
   def params(s: SparkSession, d: String): Params =
-    cache.computeIfAbsent(
-      (java.nio.file.Paths.get(d).toAbsolutePath.toString,
-        U.dirSignature(java.nio.file.Paths.get(d, "orders.parquet"))),
-      _ => train(s, d))
+    Artifacts.get(Model, d)(train(s, d))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // the fitted mixture — one row (round6 for the driver compare; the

@@ -1,6 +1,6 @@
 package graft.ml
 
-import graft.{Tables, U}
+import graft.{Artifacts, Tables, U}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -118,15 +118,11 @@ object Logreg {
     } finally f.unpersist()
   }
 
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), Array[Double]]()
-  def clearCache(): Unit = cache.clear()
+  private val Model = new Artifacts.Kind[Array[Double]]("logreg", "documents")
 
+  /** The trained gate weights of a dataset, memoized. */
   def weights(s: SparkSession, d: String): Array[Double] =
-    cache.computeIfAbsent(
-      (java.nio.file.Paths.get(d).toAbsolutePath.toString,
-        U.dirSignature(java.nio.file.Paths.get(d, "documents.parquet"))),
-      _ => train(s, d))
+    Artifacts.get(Model, d)(train(s, d))
 
   /** Bounded per-group top-k as a typed Aggregator — the scale shape
     * for grouped ranking: the buffer holds AT MOST k (score, id) pairs,

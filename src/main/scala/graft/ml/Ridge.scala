@@ -1,6 +1,6 @@
 package graft.ml
 
-import graft.{Tables, U}
+import graft.{Artifacts, Tables, U}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -71,19 +71,15 @@ object Ridge {
           / col("det")).as("w2"))
   }
 
-  /** Driver-side weights for the eval query (same algebra as the
-    * train query, memoized per data dir like [[Logreg.weights]]). */
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), (Double, Double)]()
+  private val Model = new Artifacts.Kind[(Double, Double)]("ridge", "lineitem")
 
+  /** Driver-side weights for the eval query (same algebra as the
+    * train query), memoized. */
   def weights(s: SparkSession, d: String): (Double, Double) =
-    cache.computeIfAbsent(
-      (java.nio.file.Paths.get(d).toAbsolutePath.toString,
-        U.dirSignature(java.nio.file.Paths.get(d, "lineitem.parquet"))),
-      _ => {
-        val r = solved(stats(s, d)).head()
-        (r.getDouble(1), r.getDouble(2))
-      })
+    Artifacts.get(Model, d) {
+      val r = solved(stats(s, d)).head()
+      (r.getDouble(1), r.getDouble(2))
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // the trained model — one row: n + the two ridge weights

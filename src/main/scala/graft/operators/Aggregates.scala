@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Tables, U}
+import graft.{Artifacts, Tables, U}
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
@@ -158,24 +158,15 @@ object Aggregates {
     * same ceiling agg_approx_percentile's lossless-GK regime uses. */
   val PctBoundCap: Long = 1L << 24
 
-  // one count-star per (dir, table, content signature) per JVM —
-  // parquet count() reads row-group metadata only, and the memo keeps
-  // repeat bench passes / multiple guarded queries from re-running even
-  // that. The dirSignature in the key (ADVICE r14) matches the trained-
-  // model caches: regenerating a dataset in-place within one JVM must
-  // not leave pctBoundGuard or the window_outlier_mad route reading a
-  // stale row count.
-  private val tableRowsCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Long), Long]
-
   /** Memoized count-star of a base table — the cheap row bound the
-    * percentile guards and routers key on. */
-  def tableRows(s: SparkSession, d: String, table: String): Long = {
-    val sig = U.dirSignature(
-      java.nio.file.Paths.get(d, s"$table.parquet"))
-    tableRowsCache.getOrElseUpdate((d, table, sig),
+    * percentile guards and routers key on. Parquet count() reads
+    * row-group metadata only, and the [[graft.Artifacts]] memo keeps
+    * repeat bench passes / multiple guarded queries from re-running
+    * even that; its content-signature key (ADVICE r14) means a dataset
+    * regenerated in place never serves a stale row count. */
+  def tableRows(s: SparkSession, d: String, table: String): Long =
+    Artifacts.get(new Artifacts.Kind[Long](s"rows.$table", table), d)(
       Tables.t(s, d, table).count())
-  }
 
   /** Enforce + attribute the boundedness contract of one remaining
     * `percentile` call site: the site's quantile input has at most one

@@ -1,6 +1,6 @@
 package graft.similarity
 
-import graft.{Tables, U}
+import graft.{Artifacts, Tables, U}
 import graft.functions.VectorOps._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -22,6 +22,11 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
   val Dim = 64
+
+  /** Trained IVF centroids as (centroid id, vector). */
+  type Centroids = Array[(Int, Array[Double])]
+  /** PQ codebooks: subspace × centroid × sub-vector. */
+  type Books = Array[Array[Array[Double]]]
   // Bucket-bit count trades selectivity vs recall: 2^8 = 256 buckets is
   // right for ~10^2–10^4 vectors; at 100 TB you raise it so bucket size
   // stays bounded and make `bucket` the storage partition key. The
@@ -238,7 +243,7 @@ object Similarity {
     * full corpus (the IVF counterpart of the LSH bucket path above).
     */
   def trainIvfCentroids(s: SparkSession, d: String, k: Int,
-      iters: Int = 2, sampleEvery: Long = 1L): Array[(Int, Array[Double])] = {
+      iters: Int = 2, sampleEvery: Long = 1L): Centroids = {
     graft.plans.NearestCentroid.register(s)
     // sampleEvery > 1 trains on the deterministic id-stride sample —
     // the 100 TB rule (quantizer quality needs a sample, not the
@@ -248,7 +253,7 @@ object Similarity {
     val vecs = Tables.t(s, d, "embeddings")
       .select(col("vec_id"), toDouble(col("embedding")).as("vd"))
       .filter(col("vec_id") % sampleEvery === 0)
-    var centroids: Array[(Int, Array[Double])] = vecs
+    var centroids: Centroids = vecs
       .orderBy("vec_id").limit(k).collect()
       .zipWithIndex
       .map { case (r, i) => i -> r.getSeq[Double](1).toArray }
@@ -280,7 +285,7 @@ object Similarity {
   /** Argmin-distance centroid assignment, HOF form (reference
     * implementation: squared L2 via zip_with/aggregate, argmin via
     * array_min over (dist, id) structs — evaluates interpreted). */
-  def assignColHof(vec: Column, centroids: Array[(Int, Array[Double])]): Column = {
+  def assignColHof(vec: Column, centroids: Centroids): Column = {
     def sqDist(c: Array[Double]): Column = {
       val diff = zip_with(vec, typedlit(c.toSeq), (x, y) => x - y)
       aggregate(diff, lit(0.0), (s, x) => s + x * x)
@@ -300,7 +305,7 @@ object Similarity {
     * INDEX; the trailing lookup maps it back to the centroid id, which
     * matters when Lloyd iterations empty a cluster and ids stop being
     * contiguous. */
-  def assignCol(vec: Column, centroids: Array[(Int, Array[Double])]): Column = {
+  def assignCol(vec: Column, centroids: Centroids): Column = {
     val sorted = centroids.sortBy(_._1)
     val matrix: Seq[Seq[Double]] = sorted.map(_._2.toSeq).toSeq
     val ids: Seq[Int] = sorted.map(_._1).toSeq
@@ -308,40 +313,32 @@ object Similarity {
       call_function("nearest_centroid", vec, typedlit(matrix)) + 1)
   }
 
-  /** Per-JVM memo of trained centroids. Training is deterministic for a
-    * given (dataset content, k, iters) — decimal-bridged means make the
-    * centroids partition-count invariant (see [[trainIvfCentroids]]) — so
-    * the quantizer is a property of the DATASET, not of the query:
-    * retraining on every probe would dominate the probe cost (~6 Spark
-    * jobs before the scan starts). The key carries a listing signature
-    * (file names, sizes, mtimes) of the embeddings table, so regenerating
-    * the data at the same path retrains instead of serving stale
-    * centroids; [[clearIvfCache]] force-clears. At 100 TB the same memo
-    * is a persisted centroid table trained once on a sample. */
-  private val centroidCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Int, Int), Array[(Int, Array[Double])]]()
+  /** Trained quantizers, memoized per dataset through [[Artifacts]].
+    * Training is deterministic for a given (dataset content, k, iters)
+    * — decimal-bridged means make the centroids partition-count
+    * invariant (see [[trainIvfCentroids]]) — so the quantizer is a
+    * property of the DATASET, not of the query: retraining on every
+    * probe would dominate the probe cost (~6 Spark jobs before the scan
+    * starts). At 100 TB the same memo is a persisted centroid table
+    * trained once on a sample. The IVF and PQ kinds' last-served values
+    * feed [[ivfOracleEntry]] and [[pqOracleEntry]]. */
+  private val Ivf = new Artifacts.Kind[Centroids]("ivf", "embeddings")
+  private val Sem = new Artifacts.Kind[Centroids]("semdedup", "embeddings")
+  private val Pq = new Artifacts.Kind[Books]("pq", "embeddings")
+  /** Residual codebooks with the coarse quantizer they were trained
+    * against — what [[ivfPqResidualOracleEntry]] replays. */
+  private val ResidualPq =
+    new Artifacts.Kind[(Centroids, Books)]("pq_residual", "embeddings")
 
-  def clearIvfCache(): Unit = centroidCache.clear()
-
-  /** Change-detection signature of the embeddings table (shared
-    * [[graft.U.dirSignature]] semantics). */
-  private def tableSignature(d: String): Long =
-    U.dirSignature(java.nio.file.Paths.get(d, "embeddings.parquet"))
-
-  /** Last centroids served, recorded for [[ivfOracleEntry]] (the oracle
-    * dump runs after the queries in graft.Verify, so this always holds
-    * the quantizer of the dataset under verification by dump time). */
-  @volatile private var lastCentroids: Option[Array[(Int, Array[Double])]] = None
+  /** Models the oracle builders replay that are not one artifact. */
+  private val SemServed = new Artifacts.Slot[(Centroids, Double)]("sim_semdedup")
+  private val CapServed = new Artifacts.Slot[Centroids]("sample_cluster_cap")
+  private val EvalServed =
+    new Artifacts.Slot[(Centroids, Books, Books)]("sim_eval_index_panel")
 
   def ivfCentroids(s: SparkSession, d: String, k: Int,
-      iters: Int = 2): Array[(Int, Array[Double])] = {
-    val cs = centroidCache.computeIfAbsent(
-      (java.nio.file.Paths.get(d).toAbsolutePath.toString,
-        tableSignature(d), k, iters),
-      _ => trainIvfCentroids(s, d, k, iters))
-    lastCentroids = Some(cs)
-    cs
-  }
+      iters: Int = 2): Centroids =
+    Artifacts.get(Ivf, d, k, iters)(trainIvfCentroids(s, d, k, iters))
 
   /** IVF ANN: probe the `nProbe` nearest centroids, exact cosine inside. */
   def ivfTopK(s: SparkSession, d: String, queryId: Long, k: Int,
@@ -382,32 +379,21 @@ object Similarity {
     * demonstration threshold sits at the corpus's own duplicate tail so
     * the drop rule actually exercises; on real embeddings the paper's
     * τ is ≈ 0.95+. */
-  private val semCentroidCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), Array[(Int, Array[Double])]]()
-  @volatile private var lastSemCentroids:
-    Option[(Array[(Int, Array[Double])], Double)] = None
-
   /** Per-cluster keep budget of sample_cluster_cap. */
   val CapK = 8
-  @volatile private var lastCapCentroids:
-    Option[Array[(Int, Array[Double])]] = None
-
-  def clearSemCache(): Unit = semCentroidCache.clear()
 
   /** The corpus-adaptive cluster quantizer shared by [[semDedup]] and
     * sample_cluster_cap: k ∝ N (constant expected cluster size), Lloyd
     * trained on a ≤20k deterministic id-stride sample, memoized per
-    * (dataset, content signature, k). */
+    * (dataset, k). N is the memoized row count, so a memo hit runs no
+    * Spark job. */
   def semCentroids(s: SparkSession, d: String, nCentroids: Int = 0)
-      : Array[(Int, Array[Double])] = {
-    val n = Tables.t(s, d, "embeddings").count()
+      : Centroids = {
+    val n = graft.operators.Aggregates.tableRows(s, d, "embeddings")
     val k = if (nCentroids > 0) nCentroids
       else math.max(16, (n / 300L).toInt)
     val sampleEvery = math.max(1L, n / 20000L)
-    val sig = (java.nio.file.Paths.get(d).toAbsolutePath.toString,
-      tableSignature(d) * 31 + k)
-    semCentroidCache.computeIfAbsent(sig,
-      _ => trainIvfCentroids(s, d, k, 2, sampleEvery))
+    Artifacts.get(Sem, d, k)(trainIvfCentroids(s, d, k, 2, sampleEvery))
   }
 
   def semDedup(s: SparkSession, d: String, nCentroids: Int = 0,
@@ -438,7 +424,7 @@ object Similarity {
     // see more candidate pairs) against pair flops. Measured at sf1:
     // c=1250 → 125M pairs dominated the query; c=300 → 30M.
     val cents = semCentroids(s, d, nCentroids)
-    lastSemCentroids = Some((cents, tau))
+    Artifacts.serve(SemServed, (cents, tau))
     val cidCol = assignCol(col("vd"), cents).cast("long")
     // Norms precompute per VECTOR, not per pair — inside a cluster of c
     // vectors each norm would otherwise be folded c-1 times; the pair
@@ -490,7 +476,7 @@ object Similarity {
     * persist codes next to the vectors.
     */
   def trainPqCodebooks(s: SparkSession, d: String, m: Int, k: Int,
-      iters: Int = 2): Array[Array[Array[Double]]] = {
+      iters: Int = 2): Books = {
     val vecs = Tables.t(s, d, "embeddings")
       .select(col("vec_id"), toDouble(col("embedding")).as("vd"))
     trainPqOn(s, vecs, m, k, iters)
@@ -500,14 +486,14 @@ object Similarity {
     * (vec_id, vd) frame — shared by raw-vector PQ and residual PQ
     * (which feeds coarse-quantizer residuals instead). */
   private def trainPqOn(s: SparkSession, vecs: DataFrame, m: Int, k: Int,
-      iters: Int): Array[Array[Array[Double]]] = {
+      iters: Int): Books = {
     graft.plans.NearestCentroid.register(s)
     val sub = Dim / m
     require(m * sub == Dim, s"PQ subspaces must tile Dim=$Dim, got m=$m")
     // init: subspace slices of the first k vectors by id (IVF convention)
     val seed = vecs.filter(col("vec_id") < k).orderBy("vec_id").collect()
       .map(_.getSeq[Double](1).toArray)
-    val books: Array[Array[Array[Double]]] = Array.tabulate(m, k) { (mi, j) =>
+    val books: Books = Array.tabulate(m, k) { (mi, j) =>
       seed(j).slice(mi * sub, mi * sub + sub)
     }
     // (m, sv) exploded rows: every subspace trains from the same scan
@@ -537,26 +523,9 @@ object Similarity {
     books
   }
 
-  /** Per-JVM codebook memo — same dataset-signature keying and staleness
-    * rules as [[centroidCache]]. */
-  private val pqCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Int, Int, Int), Array[Array[Array[Double]]]]()
-
-  def clearPqCache(): Unit = pqCache.clear()
-
-  /** Last codebooks served, recorded for [[pqOracleEntry]] (same
-    * run-order contract as [[lastCentroids]]). */
-  @volatile private var lastPqBooks: Option[Array[Array[Array[Double]]]] = None
-
   def pqCodebooks(s: SparkSession, d: String, m: Int, k: Int,
-      iters: Int = 2): Array[Array[Array[Double]]] = {
-    val books = pqCache.computeIfAbsent(
-      (java.nio.file.Paths.get(d).toAbsolutePath.toString,
-        tableSignature(d), m, k, iters),
-      _ => trainPqCodebooks(s, d, m, k, iters))
-    lastPqBooks = Some(books)
-    books
-  }
+      iters: Int = 2): Books =
+    Artifacts.get(Pq, d, m, k, iters)(trainPqCodebooks(s, d, m, k, iters))
 
   /** RESIDUAL PQ codebooks (the Faiss IndexIVFPQ refinement the
     * round-7 verdict asked for): train the per-subspace quantizers on
@@ -571,8 +540,8 @@ object Similarity {
     * residual rows, not the interpreted lineage); everything downstream
     * is the same fused-kernel loop as raw PQ via [[trainPqOn]]. */
   def trainResidualPqCodebooks(s: SparkSession, d: String, m: Int, k: Int,
-      coarse: Array[(Int, Array[Double])], iters: Int = 2)
-      : Array[Array[Array[Double]]] = {
+      coarse: Centroids, iters: Int = 2)
+      : Books = {
     graft.plans.NearestCentroid.register(s)
     val centArr = coarse.sortBy(_._1).map(_._2.toSeq).toSeq
     val resid = Tables.t(s, d, "embeddings")
@@ -587,25 +556,11 @@ object Similarity {
     finally resid.unpersist()
   }
 
-  private val residualPqCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Int, Int, Int, Int), Array[Array[Array[Double]]]]()
-
-  def clearResidualPqCache(): Unit = residualPqCache.clear()
-
-  /** Last residual codebooks served, with the coarse quantizer they were
-    * trained against — recorded for [[ivfPqResidualOracleEntry]]. */
-  @volatile private var lastResidualBooks:
-    Option[(Array[(Int, Array[Double])], Array[Array[Array[Double]]])] = None
-
   def residualPqCodebooks(s: SparkSession, d: String, m: Int, k: Int,
-      nCoarse: Int, iters: Int = 2): Array[Array[Array[Double]]] = {
+      nCoarse: Int, iters: Int = 2): Books = {
     val coarse = ivfCentroids(s, d, nCoarse)
-    val books = residualPqCache.computeIfAbsent(
-      (java.nio.file.Paths.get(d).toAbsolutePath.toString,
-        tableSignature(d), m, k, nCoarse, iters),
-      _ => trainResidualPqCodebooks(s, d, m, k, coarse, iters))
-    lastResidualBooks = Some((coarse, books))
-    books
+    Artifacts.get(ResidualPq, d, m, k, nCoarse, iters)(
+      (coarse, trainResidualPqCodebooks(s, d, m, k, coarse, iters)))._2
   }
 
   /** IVF-PQ with RESIDUAL codes: coarse probe prune as in [[ivfPqTopK]],
@@ -778,12 +733,6 @@ object Similarity {
       .orderBy("qid", "rn")
   }
 
-  /** Models graded by the most recent [[evalIndexPanel]] run, recorded
-    * for [[evalPanelOracleEntry]] (same run-order contract as
-    * [[lastCentroids]]: graft.Verify dumps oracle SQL after queries). */
-  @volatile private var lastEvalModels: Option[(Array[(Int, Array[Double])],
-    Array[Array[Array[Double]]], Array[Array[Array[Double]]])] = None
-
   /** One ANN evaluation harness for EVERY index variant (VERDICT r12
     * item 3): recall@10 + nDCG@10 of the LSH-bucketed, IVF, PQ, IVF-PQ,
     * and residual IVF-PQ indexes, all on the SAME fixed 10-query panel
@@ -868,7 +817,7 @@ object Similarity {
     val coarse = ivfCentroids(s, d, nCentroids)
     val rawBooks = pqCodebooks(s, d, m, kCent)
     val residBooks = residualPqCodebooks(s, d, m, kCent, nCentroids)
-    lastEvalModels = Some((coarse, rawBooks, residBooks))
+    Artifacts.serve(EvalServed, (coarse, rawBooks, residBooks))
     // the fixed panel, collected once (nPanel rows — same driver cost
     // class as the centroid literals themselves)
     val panel: Array[Array[Double]] = Tables.t(s, d, "embeddings")
@@ -885,7 +834,7 @@ object Similarity {
     // dots — the same sequential folds the single-index queries use
     val probesByQid: Seq[Seq[Int]] = panel.toSeq.map(qv =>
       coarse.sortBy(c => (sq(c._2, qv), c._1)).take(nProbe).map(_._1).toSeq)
-    def lutFor(books: Array[Array[Array[Double]]]): Seq[Seq[Seq[Double]]] =
+    def lutFor(books: Books): Seq[Seq[Seq[Double]]] =
       (0 until m).map(mi => panel.toSeq.map(qv =>
         books(mi).indices.map(j => (0 until sub).foldLeft(0.0)((acc, i) =>
           acc + qv(mi * sub + i) * books(mi)(j)(i))).toSeq))
@@ -1028,8 +977,7 @@ object Similarity {
     "sample_cluster_cap" -> ((s, d) => {
       graft.plans.NearestCentroid.register(s)
       val sess = s; import sess.implicits._
-      val cents = semCentroids(s, d)
-      lastCapCentroids = Some(cents)
+      val cents = Artifacts.serve(CapServed, semCentroids(s, d))
       val centDf = broadcast(cents.sortBy(_._1).toSeq
         .map { case (id, v) =>
           (id.toLong, v.toSeq, v.map(x => x * x).sum) }
@@ -1924,7 +1872,7 @@ object Similarity {
     * ran (training failed), the entry is omitted and the driver falls
     * back to the rows-only check instead of comparing against a stale
     * quantizer. */
-  private def ivfOracleEntry: Map[String, String] = lastCentroids match {
+  private def ivfOracleEntry: Map[String, String] = Artifacts.last(Ivf) match {
     case None => Map.empty
     case Some(cs) => Map(
       "sim_ivf_topk" -> ivfOracleSqlFor(cs),
@@ -1943,12 +1891,14 @@ object Similarity {
     * the ROUNDED similarity. Zero-norm vectors yield NULL cosine →
     * NULL comparison → the pair drops out, matching Spark's
     * null-guarded [[VectorOps.cosine]]. */
-  private def semDedupOracleEntry: Map[String, String] = lastSemCentroids match {
-    case None => Map.empty
-    case Some((cs, tau)) => Map("sim_semdedup" -> semDedupOracleSqlFor(cs, tau))
-  }
+  private def semDedupOracleEntry: Map[String, String] =
+    Artifacts.last(SemServed) match {
+      case None => Map.empty
+      case Some((cs, tau)) =>
+        Map("sim_semdedup" -> semDedupOracleSqlFor(cs, tau))
+    }
 
-  private def semDedupOracleSqlFor(cs: Array[(Int, Array[Double])],
+  private def semDedupOracleSqlFor(cs: Centroids,
       tau: Double): String = {
     val dim = cs.head._2.length
     val values = cs.sortBy(_._1)
@@ -1986,7 +1936,7 @@ object Similarity {
     * of TopKAgg's total order (dist asc, vec_id DESC on ties — the
     * aggregator's pinned tie rule). */
   private def clusterCapOracleEntry: Map[String, String] =
-    lastCapCentroids match {
+    Artifacts.last(CapServed) match {
       case None => Map.empty
       case Some(cs) => Map("sample_cluster_cap" -> {
         val dim = cs.head._2.length
@@ -2023,7 +1973,7 @@ object Similarity {
       })
     }
 
-  private def ivfOracleSqlFor(cs: Array[(Int, Array[Double])]): String = {
+  private def ivfOracleSqlFor(cs: Centroids): String = {
     val dim = cs.head._2.length
     val values = cs.sortBy(_._1)
       .map { case (id, v) => s"($id, ${v.mkString("[", ",", "]")})" }
@@ -2063,12 +2013,12 @@ object Similarity {
     * and the ADC total is the same fixed left-assoc 8-term chain the
     * Spark query emits, so round(·,6) cannot disagree by re-association.
     */
-  private def pqOracleEntry: Map[String, String] = lastPqBooks match {
+  private def pqOracleEntry: Map[String, String] = Artifacts.last(Pq) match {
     case None => Map.empty
     case Some(books) => Map("sim_pq_topk" -> pqOracleSqlFor(books))
   }
 
-  private def pqOracleSqlFor(books: Array[Array[Array[Double]]]): String = {
+  private def pqOracleSqlFor(books: Books): String = {
     val m = books.length
     val sub = books.head.head.length
     val values = (for {
@@ -2120,14 +2070,14 @@ object Similarity {
     * probe-filtered vector set instead of the full corpus. Emitted only
     * when BOTH quantizers were trained this run. */
   private def ivfPqOracleEntry: Map[String, String] =
-    (lastCentroids, lastPqBooks) match {
+    (Artifacts.last(Ivf), Artifacts.last(Pq)) match {
       case (Some(cs), Some(books)) =>
         Map("sim_ivf_pq_topk" -> ivfPqOracleSqlFor(cs, books))
       case _ => Map.empty
     }
 
-  private def ivfPqOracleSqlFor(cs: Array[(Int, Array[Double])],
-      books: Array[Array[Array[Double]]]): String = {
+  private def ivfPqOracleSqlFor(cs: Centroids,
+      books: Books): String = {
     val dim = cs.head._2.length
     val coarseValues = cs.sortBy(_._1)
       .map { case (id, v) => s"($id, ${v.mkString("[", ",", "]")})" }
@@ -2190,7 +2140,7 @@ object Similarity {
   }
 
   private def ivfPqResidualOracleEntry: Map[String, String] =
-    lastResidualBooks match {
+    Artifacts.last(ResidualPq) match {
       case Some((cs, books)) =>
         Map("sim_ivf_pq_residual" -> ivfPqResidualOracleSqlFor(cs, books))
       case None => Map.empty
@@ -2203,8 +2153,8 @@ object Similarity {
     * dot(q, c_cell) (list_dot_product over the same literals the Spark
     * side folds on the driver), then adds the m lookups in the same
     * fixed left-assoc order. */
-  private def ivfPqResidualOracleSqlFor(cs: Array[(Int, Array[Double])],
-      books: Array[Array[Array[Double]]]): String = {
+  private def ivfPqResidualOracleSqlFor(cs: Centroids,
+      books: Books): String = {
     val dim = cs.head._2.length
     val coarseValues = cs.sortBy(_._1)
       .map { case (id, v) => s"($id, ${v.mkString("[", ",", "]")})" }
@@ -2273,11 +2223,12 @@ object Similarity {
        |ORDER BY adc_ip DESC, vec_id LIMIT 10""".stripMargin
   }
 
-  private def evalPanelOracleEntry: Map[String, String] = lastEvalModels match {
-    case Some((cs, raw, resid)) =>
-      Map("sim_eval_index_panel" -> evalPanelOracleSqlFor(cs, raw, resid))
-    case None => Map.empty
-  }
+  private def evalPanelOracleEntry: Map[String, String] =
+    Artifacts.last(EvalServed) match {
+      case Some((cs, raw, resid)) =>
+        Map("sim_eval_index_panel" -> evalPanelOracleSqlFor(cs, raw, resid))
+      case None => Map.empty
+    }
 
   /** Index-panel replay: every trained model the panel graded embeds as
     * literals (the [[ivfOracleSqlFor]]/[[pqOracleSqlFor]] round-trip
@@ -2285,9 +2236,9 @@ object Similarity {
     * with the same rounding bridge and (score desc, vec_id) tie-breaks,
     * and the per-index aggregates use the same DECIMAL-summed literal
     * DCG weights and exact integer recall denominators. */
-  private def evalPanelOracleSqlFor(cs: Array[(Int, Array[Double])],
-      raw: Array[Array[Array[Double]]],
-      resid: Array[Array[Array[Double]]]): String = {
+  private def evalPanelOracleSqlFor(cs: Centroids,
+      raw: Books,
+      resid: Books): String = {
     val dim = cs.head._2.length
     val m = raw.length
     val sub = raw.head.head.length
@@ -2297,7 +2248,7 @@ object Similarity {
     val coarseValues = cs.sortBy(_._1)
       .map { case (id, v) => s"($id, ${v.mkString("[", ",", "]")})" }
       .mkString(",\n    ")
-    def bookValues(books: Array[Array[Array[Double]]]): String = (for {
+    def bookValues(books: Books): String = (for {
       mi <- 0 until m
       j <- books(mi).indices
     } yield s"($mi, $j, ${books(mi)(j).mkString("[", ",", "]")})")

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.Tables
+import graft.{Artifacts, Tables}
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,10 +19,10 @@ import org.apache.spark.sql.functions._
   *    broadcast (`dynamicpruningexpression` in PartitionFilters).
   *
   * Every layout here is materialized once per (sfDir, content signature)
-  * under `target/graft-derived/` and memoized — identical pattern to the
-  * IVF centroid memo (`Similarity.centroidCache`): a layout is a property
-  * of the DATASET, not of any query; at production scale it is the
-  * table's permanent storage layout, not a per-query step.
+  * under `target/graft-derived/` and memoized through [[graft.Artifacts]]
+  * like the trained models: a layout is a property of the DATASET, not
+  * of any query; at production scale it is the table's permanent
+  * storage layout, not a per-query step.
   *
   * Write discipline (round-12, ADVICE r11): layouts build in a
   * process-private `.tmp-<pid>` sibling and publish with ONE atomic
@@ -34,14 +34,6 @@ import org.apache.spark.sql.functions._
   * would let the stale-sibling sweep delete a LIVE layout.
   */
 object PartitionedData {
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), String]()
-
-  /** Test hook: drop the in-process path memo so a spec can exercise
-    * the on-disk readiness probe (crash-recovery paths start from a
-    * fresh JVM, where the memo is empty by construction). */
-  private[graft] def dropMemoForTests(): Unit = memo.clear()
-
   /** Change-detection signature of a source table (shared
     * [[graft.U.dirSignature]] semantics — regenerated testdata
     * re-materializes the layout). */
@@ -83,6 +75,16 @@ object PartitionedData {
       None }
   }
 
+  /** The `kind` layout derived from `table` of `d`, memoized per
+    * (sfDir, table content): the path of [[materialize]]'s build. */
+  private[sources] def derivedLayout(d: String, kind: String, table: String,
+      ready: java.nio.file.Path => Boolean = p =>
+        java.nio.file.Files.isDirectory(p),
+      inPlace: Boolean = false)
+      (write: java.nio.file.Path => Unit): String =
+    Artifacts.get(new Artifacts.Kind[String](kind, table), d)(
+      materialize(d, kind, signature(d, table), ready, inPlace)(write))
+
   /** The shared derived-layout lifecycle: resolve the content-addressed
     * name, and if the layout is not `ready`, sweep stale same-source
     * generations, build into a `.tmp-<pid>` sibling via `write`, and
@@ -97,10 +99,8 @@ object PartitionedData {
     * tables already commit each snapshot atomically themselves, and
     * `ready` (`versions.nonEmpty`) rejects a build that crashed before
     * its first commit. */
-  private def derivedLayout(d: String, kind: String, sig: Long,
-      ready: java.nio.file.Path => Boolean = p =>
-        java.nio.file.Files.isDirectory(p),
-      inPlace: Boolean = false)
+  private def materialize(d: String, kind: String, sig: Long,
+      ready: java.nio.file.Path => Boolean, inPlace: Boolean)
       (write: java.nio.file.Path => Unit): String = {
     val base = java.nio.file.Paths.get("target", "graft-derived")
       .toAbsolutePath
@@ -218,34 +218,26 @@ object PartitionedData {
   /** Path of the (event_type, dt)-partitioned events layout, writing it
     * on first use. 5 types × 30 days at test SF → 150 directories; the
     * partition columns are dropped from the data files (hive layout). */
-  def eventsByTypeDate(spark: SparkSession, d: String): String = {
-    val key = (d, signature(d, "events"))
-    memo.computeIfAbsent(key, { _ =>
-      derivedLayout(d, "events_by_type_date", key._2) { tmp =>
-        Tables.t(spark, d, "events")
-          .withColumn("dt", to_date(col("ts")))
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy("event_type", "dt")
-          .parquet(tmp.toString)
-      }
-    })
-  }
+  def eventsByTypeDate(spark: SparkSession, d: String): String =
+    derivedLayout(d, "events_by_type_date", "events") { tmp =>
+      Tables.t(spark, d, "events")
+        .withColumn("dt", to_date(col("ts")))
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy("event_type", "dt")
+        .parquet(tmp.toString)
+    }
 
   /** Avro landing-zone copy of `orders` — the ingest-side fixture for
     * [[AvroDataSource]]: at production scale this directory is what a
     * Kafka-connect/CDC dump writes; the engine reads it splittable and
     * every analytic query runs on the columnar store instead. Memoized
     * per (sfDir, orders content) exactly like [[eventsByTypeDate]]. */
-  def ordersAvroLanding(spark: SparkSession, d: String): String = {
-    val sig = signature(d, "orders")
-    memo.computeIfAbsent((s"avro:$d", sig), { _ =>
-      derivedLayout(d, "orders_avro", sig) { tmp =>
-        Tables.t(spark, d, "orders")
-          .write.format("graft-avro").mode(SaveMode.Overwrite)
-          .save(tmp.toString)
-      }
-    })
-  }
+  def ordersAvroLanding(spark: SparkSession, d: String): String =
+    derivedLayout(d, "orders_avro", "orders") { tmp =>
+      Tables.t(spark, d, "orders")
+        .write.format("graft-avro").mode(SaveMode.Overwrite)
+        .save(tmp.toString)
+    }
 
   /** ORC landing-zone copy of `events` — the second real columnar
     * ingest format next to [[ordersAvroLanding]] (Hive/Trino shops land
@@ -254,15 +246,11 @@ object PartitionedData {
     * mix this fixture checks: long, timestamp[us] (instant semantics
     * under the UTC session), string, double. Memoized per (sfDir,
     * events content). */
-  def eventsOrcLanding(spark: SparkSession, d: String): String = {
-    val sig = signature(d, "events")
-    memo.computeIfAbsent((s"orc:$d", sig), { _ =>
-      derivedLayout(d, "events_orc", sig) { tmp =>
-        Tables.t(spark, d, "events")
-          .write.mode(SaveMode.Overwrite).orc(tmp.toString)
-      }
-    })
-  }
+  def eventsOrcLanding(spark: SparkSession, d: String): String =
+    derivedLayout(d, "events_orc", "events") { tmp =>
+      Tables.t(spark, d, "events")
+        .write.mode(SaveMode.Overwrite).orc(tmp.toString)
+    }
 
   /** h5ad landing-zone fixture — the reference's OWN wire format
     * (`bin/concatenate.py:62` reads a CSR AnnData file per dataset)
@@ -281,35 +269,32 @@ object PartitionedData {
     * files, one task each), not a query-path step. Memoized per
     * (sfDir, events content) like every layout here. */
   def eventsH5adLanding(spark: SparkSession, d: String): String = {
-    val sig = signature(d, "events")
-    val dir = memo.computeIfAbsent((s"h5ad:$d", sig), { _ =>
-      derivedLayout(d, "events_h5ad", sig) { tmp =>
-        val rows = Tables.t(spark, d, "events")
-          .filter(col("user_id").isNotNull && col("value").isNotNull &&
-            col("event_type").isNotNull)
-          .groupBy("user_id", "event_type")
-          .agg(graft.U.dbl(sum(graft.U.dec4(col("value")))).as("v"))
-          .collect()
-        val vars = rows.map(_.getString(1)).distinct.sorted
-        val varIdx = vars.zipWithIndex.toMap
-        val byUser = rows.groupBy(_.getLong(0)).toSeq.sortBy(_._1)
-        val obs = byUser.map { case (u, _) => s"user_$u" }
-        val data = scala.collection.mutable.ArrayBuffer.empty[Double]
-        val indices = scala.collection.mutable.ArrayBuffer.empty[Long]
-        val indptr = scala.collection.mutable.ArrayBuffer(0L)
-        byUser.foreach { case (_, rs) =>
-          rs.map(r => (varIdx(r.getString(1)).toLong, r.getDouble(2)))
-            .sortBy(_._1).foreach { case (j, v) =>
-              indices += j; data += v
-            }
-          indptr += indices.length.toLong
-        }
-        java.nio.file.Files.createDirectories(tmp)
-        MiniHdf5Writer.writeH5ad(tmp.resolve("events.h5ad").toString,
-          obs, vars, data.toArray, indices.toArray, indptr.toArray,
-          wide = true, gzipChunks = 256)
+    val dir = derivedLayout(d, "events_h5ad", "events") { tmp =>
+      val rows = Tables.t(spark, d, "events")
+        .filter(col("user_id").isNotNull && col("value").isNotNull &&
+          col("event_type").isNotNull)
+        .groupBy("user_id", "event_type")
+        .agg(graft.U.dbl(sum(graft.U.dec4(col("value")))).as("v"))
+        .collect()
+      val vars = rows.map(_.getString(1)).distinct.sorted
+      val varIdx = vars.zipWithIndex.toMap
+      val byUser = rows.groupBy(_.getLong(0)).toSeq.sortBy(_._1)
+      val obs = byUser.map { case (u, _) => s"user_$u" }
+      val data = scala.collection.mutable.ArrayBuffer.empty[Double]
+      val indices = scala.collection.mutable.ArrayBuffer.empty[Long]
+      val indptr = scala.collection.mutable.ArrayBuffer(0L)
+      byUser.foreach { case (_, rs) =>
+        rs.map(r => (varIdx(r.getString(1)).toLong, r.getDouble(2)))
+          .sortBy(_._1).foreach { case (j, v) =>
+            indices += j; data += v
+          }
+        indptr += indices.length.toLong
       }
-    })
+      java.nio.file.Files.createDirectories(tmp)
+      MiniHdf5Writer.writeH5ad(tmp.resolve("events.h5ad").toString,
+        obs, vars, data.toArray, indices.toArray, indptr.toArray,
+        wide = true, gzipChunks = 256)
+    }
     s"$dir/events.h5ad"
   }
 
@@ -331,20 +316,16 @@ object PartitionedData {
     * the corpus count so expected bucket occupancy stays bounded —
     * fixed 8-bit bucketing made the edge set grow ~quadratically with
     * occupancy (measured at sf2, BASELINE.md r11). */
-  def lshEdgeSet(spark: SparkSession, d: String): String = {
-    val sig = signature(d, "embeddings")
-    memo.computeIfAbsent((s"lshedges:$d", sig), { _ =>
-      derivedLayout(d, "lsh_edges", sig) { tmp =>
-        val emb = Tables.t(spark, d, "embeddings")
-          .select(col("vec_id"), col("embedding"))
-        graft.dedup.Dedup.embeddingLshPairs(emb,
-            graft.similarity.Similarity.adaptiveNBits(emb.count()))
-          .filter(col("cos_sim") >= 0.05)
-          .select(col("id1").as("a"), col("id2").as("b"))
-          .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      }
-    })
-  }
+  def lshEdgeSet(spark: SparkSession, d: String): String =
+    derivedLayout(d, "lsh_edges", "embeddings") { tmp =>
+      val emb = Tables.t(spark, d, "embeddings")
+        .select(col("vec_id"), col("embedding"))
+      graft.dedup.Dedup.embeddingLshPairs(emb,
+          graft.similarity.Similarity.adaptiveNBits(emb.count()))
+        .filter(col("cos_sim") >= 0.05)
+        .select(col("id1").as("a"), col("id2").as("b"))
+        .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    }
 
   /** CSV landing-zone copy of `nation` with 3 PLANTED malformed lines
     * — the permissive-ingest fixture for scan_csv_permissive: real
@@ -357,23 +338,19 @@ object PartitionedData {
     * into the directory like any other split. The bad lines append
     * inside the tmp dir BEFORE the atomic publish, so a layout missing
     * its garbage can never be observed under the final name. */
-  def nationCsvLanding(spark: SparkSession, d: String): String = {
-    val sig = signature(d, "nation")
-    memo.computeIfAbsent((s"csv:$d", sig), { _ =>
-      derivedLayout(d, "nation_csv", sig) { tmp =>
-        Tables.t(spark, d, "nation")
-          .write.mode(SaveMode.Overwrite)
-          .option("header", "false").csv(tmp.toString)
-        java.nio.file.Files.write(
-          tmp.resolve("part-99999-malformed.csv"),
-          java.util.Arrays.asList(
-            "notakey,BADLAND planted malformed row,0",
-            "98,WORSELAND planted malformed row,notaregion",
-            "99,EXTRALAND planted malformed row,1,too,many,columns"),
-          java.nio.charset.StandardCharsets.UTF_8)
-      }
-    })
-  }
+  def nationCsvLanding(spark: SparkSession, d: String): String =
+    derivedLayout(d, "nation_csv", "nation") { tmp =>
+      Tables.t(spark, d, "nation")
+        .write.mode(SaveMode.Overwrite)
+        .option("header", "false").csv(tmp.toString)
+      java.nio.file.Files.write(
+        tmp.resolve("part-99999-malformed.csv"),
+        java.util.Arrays.asList(
+          "notakey,BADLAND planted malformed row,0",
+          "98,WORSELAND planted malformed row,notaregion",
+          "99,EXTRALAND planted malformed row,1,too,many,columns"),
+        java.nio.charset.StandardCharsets.UTF_8)
+    }
 
   /** Manifest-tracked snapshot of `orders` ([[ManifestTable]]) —
     * range-partitioned and sorted on `o_orderdate` so per-file min/max
@@ -382,20 +359,16 @@ object PartitionedData {
     * production scale this is the table's permanent format.
     * ManifestTable commits snapshots atomically itself, so manifest
     * layouts build in place with `versions.nonEmpty` as readiness. */
-  def ordersManifestTable(spark: SparkSession, d: String): String = {
-    val sig = signature(d, "orders")
-    memo.computeIfAbsent((s"manifest:$d", sig), { _ =>
-      derivedLayout(d, "orders_manifest", sig,
-        p => ManifestTable.versions(p.toString).nonEmpty,
-        inPlace = true) { tmp =>
-        ManifestTable.write(
-          Tables.t(spark, d, "orders")
-            .repartitionByRange(8, col("o_orderdate"))
-            .sortWithinPartitions("o_orderdate"),
-          tmp.toString, statsCols = Seq("o_orderdate"))
-      }
-    })
-  }
+  def ordersManifestTable(spark: SparkSession, d: String): String =
+    derivedLayout(d, "orders_manifest", "orders",
+      p => ManifestTable.versions(p.toString).nonEmpty,
+      inPlace = true) { tmp =>
+      ManifestTable.write(
+        Tables.t(spark, d, "orders")
+          .repartitionByRange(8, col("o_orderdate"))
+          .sortWithinPartitions("o_orderdate"),
+        tmp.toString, statsCols = Seq("o_orderdate"))
+    }
 
   /** The FULL lakehouse ingestion path as one derived table (round-8
     * verdict item 8): producer lands `orders` as Avro
@@ -412,44 +385,31 @@ object PartitionedData {
     * dir and publishes with one rename; the returned path is the
     * `table` subdirectory. */
   def ordersLakehouseTable(spark: SparkSession, d: String): String = {
-    val sig = signature(d, "orders")
-    // The Avro landing memoizes on the SAME map, and
-    // ConcurrentHashMap.computeIfAbsent forbids a nested update from
-    // inside the mapping function — the JDK throws "Recursive update"
-    // whenever the two keys happen to land in the same hash bin, so the
-    // failure is flaky by key hash (first caught by the full sf0.01
-    // sweep, where map iteration order ran lakehouse before avro).
-    // Resolve the landing BEFORE entering this memo's lambda; the call
-    // is itself memoized and a ready layout returns immediately.
-    val landing = ordersAvroLanding(spark, d)
-    memo.computeIfAbsent((s"lakehouse:$d", sig), { _ =>
-      val root = derivedLayout(d, "orders_lakehouse", sig,
-        p => ManifestTable.versions(
-          p.resolve("table").toString).nonEmpty,
-        inPlace = true) { tmp =>
-        val stage = tmp.resolve("stage").toString
-        val ckpt = tmp.resolve("ckpt").toString
-        val table = tmp.resolve("table").toString
-        val q = spark.readStream.format("graft-avro")
-          .schema(Tables.t(spark, d, "orders").schema)
-          .load(landing)
-          .writeStream.format("parquet").option("path", stage)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-        // streamed micro-batch output → manifest snapshot v1 (small
-        // files, per-file o_orderdate stats), then compact → v2: the
-        // maintenance op a streaming-ingested table always needs
-        ManifestTable.write(
-          spark.read.parquet(stage)
-            .repartitionByRange(8, col("o_orderdate"))
-            .sortWithinPartitions("o_orderdate"),
-          table, statsCols = Seq("o_orderdate"))
-        ManifestTable.compact(spark, table, Seq("o_orderdate"),
-          targetFiles = 4, clusterBy = Some("o_orderdate"))
-      }
-      java.nio.file.Paths.get(root).resolve("table").toString
-    })
+    val root = derivedLayout(d, "orders_lakehouse", "orders",
+      p => ManifestTable.versions(p.resolve("table").toString).nonEmpty,
+      inPlace = true) { tmp =>
+      val stage = tmp.resolve("stage").toString
+      val ckpt = tmp.resolve("ckpt").toString
+      val table = tmp.resolve("table").toString
+      val q = spark.readStream.format("graft-avro")
+        .schema(Tables.t(spark, d, "orders").schema)
+        .load(ordersAvroLanding(spark, d))
+        .writeStream.format("parquet").option("path", stage)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append").start()
+      try q.processAllAvailable() finally q.stop()
+      // streamed micro-batch output → manifest snapshot v1 (small
+      // files, per-file o_orderdate stats), then compact → v2: the
+      // maintenance op a streaming-ingested table always needs
+      ManifestTable.write(
+        spark.read.parquet(stage)
+          .repartitionByRange(8, col("o_orderdate"))
+          .sortWithinPartitions("o_orderdate"),
+        table, statsCols = Seq("o_orderdate"))
+      ManifestTable.compact(spark, table, Seq("o_orderdate"),
+        targetFiles = 4, clusterBy = Some("o_orderdate"))
+    }
+    java.nio.file.Paths.get(root).resolve("table").toString
   }
 
   /** CDC-merged snapshot of `orders` — the [[ManifestTable.merge]]
@@ -465,34 +425,30 @@ object PartitionedData {
     * carries the rest by reference — ManifestSpec asserts that
     * selectivity; `scan_manifest_merge` oracles the merged CONTENT
     * against plain SQL over the original orders. */
-  def ordersMergedManifestTable(spark: SparkSession, d: String): String = {
-    val sig = signature(d, "orders")
-    memo.computeIfAbsent((s"merged:$d", sig), { _ =>
-      derivedLayout(d, "orders_merged", sig,
-        p => ManifestTable.versions(p.toString).nonEmpty,
-        inPlace = true) { tmp =>
-        val out = tmp.toString
-        val orders = Tables.t(spark, d, "orders")
-        ManifestTable.write(
-          orders.repartitionByRange(8, col("o_orderkey"))
-            .sortWithinPartitions("o_orderkey"),
-          out, statsCols = Seq("o_orderkey"))
-        val updates = orders.filter(col("o_orderkey") < 1000)
-          .withColumn("o_totalprice", col("o_totalprice") + 50.0)
-          .withColumn("__op", lit("U"))
-        val deletes = orders
-          .filter(col("o_orderkey") >= 1000 && col("o_orderkey") < 2000)
-          .withColumn("__op", lit("D"))
-        val inserts = orders.filter(col("o_orderkey") < 500)
-          .withColumn("o_orderkey", col("o_orderkey") + 10000000L)
-          .withColumn("o_totalprice", lit(1000.0))
-          .withColumn("__op", lit("U"))
-        ManifestTable.merge(spark, out,
-          updates.unionByName(deletes).unionByName(inserts),
-          keyCol = "o_orderkey", clusterBy = Some("o_orderkey"))
-      }
-    })
-  }
+  def ordersMergedManifestTable(spark: SparkSession, d: String): String =
+    derivedLayout(d, "orders_merged", "orders",
+      p => ManifestTable.versions(p.toString).nonEmpty,
+      inPlace = true) { tmp =>
+      val out = tmp.toString
+      val orders = Tables.t(spark, d, "orders")
+      ManifestTable.write(
+        orders.repartitionByRange(8, col("o_orderkey"))
+          .sortWithinPartitions("o_orderkey"),
+        out, statsCols = Seq("o_orderkey"))
+      val updates = orders.filter(col("o_orderkey") < 1000)
+        .withColumn("o_totalprice", col("o_totalprice") + 50.0)
+        .withColumn("__op", lit("U"))
+      val deletes = orders
+        .filter(col("o_orderkey") >= 1000 && col("o_orderkey") < 2000)
+        .withColumn("__op", lit("D"))
+      val inserts = orders.filter(col("o_orderkey") < 500)
+        .withColumn("o_orderkey", col("o_orderkey") + 10000000L)
+        .withColumn("o_totalprice", lit(1000.0))
+        .withColumn("__op", lit("U"))
+      ManifestTable.merge(spark, out,
+        updates.unionByName(deletes).unionByName(inserts),
+        keyCol = "o_orderkey", clusterBy = Some("o_orderkey"))
+    }
 
   /** Z-ORDERED manifest snapshot of `orders` — one layout serving
     * range predicates on EITHER (o_custkey, o_orderdate): files sorted
@@ -501,27 +457,23 @@ object PartitionedData {
     * (custkey rescaled to ~256 buckets from its actual domain, dates
     * to 8-day buckets from the corpus floor) — unbalanced ranges
     * degenerate the curve to a single-column sort (ZOrderSpec). */
-  def ordersZorderManifestTable(spark: SparkSession, d: String): String = {
-    val sig = signature(d, "orders")
-    memo.computeIfAbsent((s"zorder:$d", sig), { _ =>
-      derivedLayout(d, "orders_zorder", sig,
-        p => ManifestTable.versions(p.toString).nonEmpty,
-        inPlace = true) { tmp =>
-        graft.plans.ZOrder64.register(spark)
-        val orders = Tables.t(spark, d, "orders")
-        val maxCust = orders.agg(max(col("o_custkey"))).head().getLong(0)
-        val cDiv = math.max(1L, (maxCust + 1) / 256)
-        val day0 = 9131L // epoch day of 1995-01-01, the corpus floor
-        val zkey = call_function("zorder64",
-          expr(s"o_custkey div $cDiv"),
-          (((unix_micros(col("o_orderdate")) / lit(86400000000L))
-            .cast("long") - day0) / lit(8L)).cast("long"))
-        ManifestTable.write(
-          orders.repartitionByRange(32, zkey).sortWithinPartitions(zkey),
-          tmp.toString, statsCols = Seq("o_custkey", "o_orderdate"))
-      }
-    })
-  }
+  def ordersZorderManifestTable(spark: SparkSession, d: String): String =
+    derivedLayout(d, "orders_zorder", "orders",
+      p => ManifestTable.versions(p.toString).nonEmpty,
+      inPlace = true) { tmp =>
+      graft.plans.ZOrder64.register(spark)
+      val orders = Tables.t(spark, d, "orders")
+      val maxCust = orders.agg(max(col("o_custkey"))).head().getLong(0)
+      val cDiv = math.max(1L, (maxCust + 1) / 256)
+      val day0 = 9131L // epoch day of 1995-01-01, the corpus floor
+      val zkey = call_function("zorder64",
+        expr(s"o_custkey div $cDiv"),
+        (((unix_micros(col("o_orderdate")) / lit(86400000000L))
+          .cast("long") - day0) / lit(8L)).cast("long"))
+      ManifestTable.write(
+        orders.repartitionByRange(32, zkey).sortWithinPartitions(zkey),
+        tmp.toString, statsCols = Seq("o_custkey", "o_orderdate"))
+    }
 
   /** Embeddings partitioned BY COARSE CELL — the DESIGN_SCALE claim
     * ("at production `cid` is the storage partition key") made real:
@@ -533,20 +485,16 @@ object PartitionedData {
     * is the same memoized [[graft.similarity.Similarity.ivfCentroids]]
     * every IVF query shares, so layouts and probes can never disagree
     * on cell ids. */
-  def embeddingsByCell(spark: SparkSession, d: String): String = {
-    val sig = signature(d, "embeddings")
-    memo.computeIfAbsent((s"embcell:$d", sig), { _ =>
-      derivedLayout(d, "embeddings_by_cell", sig) { tmp =>
-        graft.plans.NearestCentroid.register(spark)
-        val cents = graft.similarity.Similarity.ivfCentroids(spark, d, 16)
-        Tables.t(spark, d, "embeddings")
-          .withColumn("cid", graft.similarity.Similarity.assignCol(
-            graft.functions.VectorOps.toDouble(col("embedding")), cents))
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy("cid").parquet(tmp.toString)
-      }
-    })
-  }
+  def embeddingsByCell(spark: SparkSession, d: String): String =
+    derivedLayout(d, "embeddings_by_cell", "embeddings") { tmp =>
+      graft.plans.NearestCentroid.register(spark)
+      val cents = graft.similarity.Similarity.ivfCentroids(spark, d, 16)
+      Tables.t(spark, d, "embeddings")
+        .withColumn("cid", graft.similarity.Similarity.assignCol(
+          graft.functions.VectorOps.toDouble(col("embedding")), cents))
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy("cid").parquet(tmp.toString)
+    }
 
   private def deleteRecursively(p: java.nio.file.Path): Unit =
     if (java.nio.file.Files.exists(p)) {

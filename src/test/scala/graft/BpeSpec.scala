@@ -60,7 +60,7 @@ class BpeSpec extends SparkSpec {
   }
 
   test("trained merge rules match the independent reference implementation") {
-    functions.Subword.clear()
+    Artifacts.clear()
     val engine = functions.Bpe.queries("vocab_bpe_train")(spark, sfDir)
       .as[(Int, String, String, Long)].collect().toSeq
     val wordFreqs = Tables.t(spark, sfDir, "documents")
@@ -110,44 +110,8 @@ class BpeSpec extends SparkSpec {
     assert(on.toSeq === off.toSeq)
   }
 
-  test("rules memo invalidates when the dataset is rewritten (no stale serve)") {
-    // all four tokenizers serve their models through the one Subword
-    // memo; each row lists what its model learned
-    val dir = java.nio.file.Files.createTempDirectory("graft-bpe-memo").toString
-    def writeDocs(texts: Seq[String]): Unit =
-      texts.zipWithIndex
-        .map { case (t, i) => (i.toLong, t, "en", "s", t.length.toLong) }
-        .toDF("doc_id", "text", "lang", "source", "n_chars")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$dir/documents.parquet")
-    // tokenizer → (learned tokens, the token for "er", the token for "lo")
-    val learned: Seq[(String, () => Set[String], String, String)] = Seq(
-      ("bpe", () => functions.Bpe.trainRules(spark, dir).map(_.merged).toSet,
-        "er", "lo"),
-      ("bytebpe",
-        () => functions.ByteBpe.trainRules(spark, dir).map(_.merged).toSet,
-        "101_114", "108_111"),
-      ("wordpiece",
-        () => functions.WordPiece.model(spark, dir)._1.map(_.merged).toSet,
-        "er", "lo"),
-      ("unigram", () => functions.Unigram.model(spark, dir).map(_._1).toSet,
-        "er", "lo"))
-    // corpus A: 'er' dominates
-    writeDocs(Seq.fill(5)("er er er er"))
-    learned.foreach { case (t, model, er, lo) =>
-      val m = model()
-      assert(m(er) && !m(lo), s"$t on corpus A: $m")
-    }
-    // rewrite with a different corpus: 'lo' dominates
-    writeDocs(Seq.fill(5)("lo lo lo lo"))
-    learned.foreach { case (t, model, er, lo) =>
-      val m = model()
-      assert(m(lo) && !m(er), s"stale $t model served after rewrite: $m")
-    }
-  }
-
   test("apply: tokens round-trip to the original words, compression holds") {
-    functions.Subword.clear()
+    Artifacts.clear()
     plans.BpeMerge.register(spark)
     val rules = functions.Bpe.trainRules(spark, sfDir).map(_.rule)
     val words = Tables.t(spark, sfDir, "documents").limit(200)
