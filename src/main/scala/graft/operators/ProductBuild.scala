@@ -19,9 +19,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: modality tagging and union are map-only; the
   * intersection aggregates the narrow key projection (map-side combine)
-  * and semi-joins the fact against it; the donor join broadcasts the
-  * dim; the write is hash-partitioned by (modality, dataset) for
-  * downstream partition pruning.
+  * and semi-joins the fact against it (the fact side is shuffled for
+  * that semi-join at every scale, see [[unionIntersect]]); the donor
+  * join broadcasts the dim; the write is hash-partitioned by
+  * (modality, dataset) for downstream partition pruning.
   */
 object ProductBuild {
 
@@ -41,9 +42,15 @@ object ProductBuild {
     }
     val fact = tagged.reduce(_ unionByName _)
     // Partial-aggregated key set + left-semi join (same shape as
-    // Pipeline.flagship): the aggregation shuffles only the narrow key
-    // projection with map-side combine; AQE broadcasts the key set at
-    // small scale, sort-merge semi at 100 TB. A collect_set window here
+    // Pipeline.flagship): the key aggregation shuffles only the narrow
+    // (dataset, cell_id) projection with map-side combine. The semi-join
+    // is NOT shuffle-free at small scale: the static plan is a sort-merge
+    // semi-join, so each modality's full fact rows are exchanged on the
+    // null-safe keys (coalesce/isnull) first, and AQE turns the join into
+    // a broadcast only after those shuffle stages have run. The final
+    // plan of a product build keeps full-fact ShuffleQueryStages under
+    // the broadcast semi-join. Each h5ad file is also decoded twice, once
+    // for the key set and once for the fact. A collect_set window here
     // would shuffle AND sort the full fact.
     //
     // Null-SAFE join keys (<=>): groupBy buckets null keys together, and

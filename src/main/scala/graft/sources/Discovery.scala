@@ -1,9 +1,8 @@
 package graft.sources
 
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,7 +18,12 @@ import org.apache.spark.sql.functions._
   * 6-dataset corpus (no network egress; same protocol shape EsFetchSpec
   * pins, incl. the 303-body-redirect and 3 pages at size 2), so the
   * registered query exercises the real fetch → land → validate → parse →
-  * pivot lineage on every gate run. The corpus covers the reference's
+  * pivot lineage on every gate run. The stub comes from
+  * [[Loopback.httpServer]], so its responses do not wait on the
+  * client's delayed ACK, and [[EsResponse.pagedDatasets]] parses,
+  * projects and collects the landed pages in one Spark job, then runs
+  * the totals, de-duplication and completeness checks on the collected
+  * rows. The corpus covers the reference's
   * edge cases: laterality-suffixed organs (strip per
   * `bin/concatenate.py:28`), `living_donor_data` vs `organ_donor_data`
   * vs both (`make_uuids_tsv.py:105,124`), an all-null donor block, a
@@ -77,9 +81,13 @@ object Discovery {
          | "donor": $donor}}""".stripMargin
     }
 
-  private def pageBody(from: Int, size: Int): String = {
+  /** Datasets in the corpus (the `hits.total.value` every page reports). */
+  private[graft] def corpusSize: Int = hitJsons.size
+
+  /** The search response for the `from`/`size` window of the corpus. */
+  private[graft] def pageBody(from: Int, size: Int): String = {
     val page = hitJsons.slice(from, from + size)
-    s"""{"hits": {"total": {"value": ${hitJsons.size}, "relation": "eq"},
+    s"""{"hits": {"total": {"value": $corpusSize, "relation": "eq"},
        | "hits": [${page.mkString(",")}]}}""".stripMargin
   }
 
@@ -96,7 +104,7 @@ object Discovery {
     * covers every read. */
   def discoverFromStub(spark: SparkSession): DataFrame = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    val server = Loopback.httpServer()
     val port = server.getAddress.getPort
     server.createContext("/v3/search", (ex: HttpExchange) => {
       // reference endpoint behavior: the 303's BODY carries the

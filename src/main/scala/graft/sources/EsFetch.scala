@@ -22,7 +22,8 @@ import com.fasterxml.jackson.databind.ObjectMapper
   * Deliberately DRIVER-SIDE: discovery responses are dim-sized (one hit
   * per dataset, ≤ thousands). Each page lands verbatim as one JSON file;
   * the engine side ([[EsResponse.pagedDatasets]]) re-validates totals
-  * and completeness declaratively, so a bug here fails loudly there.
+  * and completeness on the rows it collects, so a bug here fails loudly
+  * there.
   */
 object EsFetch {
 

@@ -15,25 +15,8 @@ class GoldenPipelineSpec extends SparkSpec {
   private val tmp = Files.createTempDirectory("graft-golden").toString
 
   test("ES discovery: nested hits extraction + donor concept pivot (entry point 1)") {
-    // Miniature of the reference's search response (make_uuids_tsv.py:67-142):
-    // one organ donor (Age/Sex via different value sources), one living
-    // donor, one hit with no donor metadata at all.
-    val json =
-      """{"hits": {"hits": [
-        |  {"_source": {"uuid": "u1", "hubmap_id": "HBM1",
-        |    "origin_samples_unique_mapped_organs": ["Lung (Left)"],
-        |    "donor": {"metadata": {"organ_donor_data": [
-        |      {"grouping_concept_preferred_term": "Age", "data_value": "61", "preferred_term": "years"},
-        |      {"grouping_concept_preferred_term": "Sex", "data_value": "1", "preferred_term": "Female"}]}}}},
-        |  {"_source": {"uuid": "u2", "hubmap_id": "HBM2",
-        |    "origin_samples_unique_mapped_organs": ["Heart"],
-        |    "donor": {"metadata": {"living_donor_data": [
-        |      {"grouping_concept_preferred_term": "Body Mass Index", "data_value": "27.5", "preferred_term": "kg/m^2"}]}}}},
-        |  {"_source": {"uuid": "u3", "hubmap_id": "HBM3",
-        |    "origin_samples_unique_mapped_organs": ["Heart"]}}
-        |]}}""".stripMargin
     val path = s"$tmp/es_response.json"
-    Files.writeString(Paths.get(path), json)
+    Files.writeString(Paths.get(path), DiscoveryFixtures.response)
 
     val out = EsResponse.datasetsFromResponse(spark, path)
       .orderBy("uuid")
@@ -49,17 +32,7 @@ class GoldenPipelineSpec extends SparkSpec {
   }
 
   test("ES paged discovery: overlap dedup, completeness and consistency gates") {
-    def page(total: Int, uuids: Seq[String]): String = {
-      val hits = uuids.map(u =>
-        s"""{"_source": {"uuid": "$u", "hubmap_id": "HBM-$u",
-           |  "origin_samples_unique_mapped_organs": ["Heart"],
-           |  "donor": {"metadata": {"organ_donor_data": [
-           |    {"grouping_concept_preferred_term": "Age",
-           |     "data_value": "50", "preferred_term": "years"}]}}}}""".stripMargin)
-        .mkString(",\n")
-      s"""{"hits": {"total": {"value": $total, "relation": "eq"},
-         |  "hits": [$hits]}}""".stripMargin
-    }
+    import DiscoveryFixtures.page
     val d = s"$tmp/pages"
     Files.createDirectories(Paths.get(d))
     Files.writeString(Paths.get(s"$d/p0.json"), page(3, Seq("u1", "u2")))
@@ -100,11 +73,10 @@ class GoldenPipelineSpec extends SparkSpec {
 
   test("entity-API tissue fallback: no tissue argument resolves per-dataset " +
     "organ codes over HTTP and strips laterality (concatenate.py:22-28,60-61)") {
-    import java.net.InetSocketAddress
     import java.nio.charset.StandardCharsets
-    import com.sun.net.httpserver.{HttpExchange, HttpServer}
+    import com.sun.net.httpserver.HttpExchange
     import graft.model.{CellObs, DataModel, FactRow}
-    import graft.sources.{EntityApi, YamlDim}
+    import graft.sources.{EntityApi, Loopback, YamlDim}
 
     // organ dictionary fixture in the organ_types.yaml two-level shape
     val organDict = YamlDim.parse(
@@ -118,7 +90,7 @@ class GoldenPipelineSpec extends SparkSpec {
     // stub entity API: GET /dataset/{uuid}/organs/ → organ code body
     val codes = Map("d1" -> "LK", "d2" -> "HT")
     val gets = new java.util.concurrent.atomic.AtomicInteger(0)
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    val server = Loopback.httpServer()
     server.createContext("/", (ex: HttpExchange) => {
       gets.incrementAndGet()
       val Pat = "/dataset/([^/]+)/organs/".r
@@ -170,11 +142,10 @@ class GoldenPipelineSpec extends SparkSpec {
 
   test("entity-API bounded failure semantics: request timeout, one retry on " +
     "transient 5xx, JSON organ bodies (ADVICE r10: no unbounded hangs)") {
-    import java.net.InetSocketAddress
     import java.nio.charset.StandardCharsets
     import java.time.Duration
-    import com.sun.net.httpserver.{HttpExchange, HttpServer}
-    import graft.sources.EntityApi
+    import com.sun.net.httpserver.HttpExchange
+    import graft.sources.{EntityApi, Loopback}
 
     // the live endpoint answers JSON, not plain text (the reference's own
     // parsing is broken — concatenate.py:26-27 keys organ_dict on the
@@ -193,7 +164,7 @@ class GoldenPipelineSpec extends SparkSpec {
 
     val gets = new java.util.concurrent.atomic.AtomicInteger(0)
     val mode = new java.util.concurrent.atomic.AtomicReference[String]("flaky")
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    val server = Loopback.httpServer()
     // concurrent handler pool: the default executor is the dispatcher
     // thread itself, so a handler sleeping past the client timeout would
     // serialize the retry BEHIND the stuck first request and the GET

@@ -1,13 +1,13 @@
 package graft
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, FileNotFoundException}
-import java.net.{InetSocketAddress, URI}
+import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs._
 import org.apache.hadoop.fs.permission.FsPermission
@@ -32,7 +32,7 @@ object MiniS3 {
 
   final class Server {
     private val objects = new ConcurrentHashMap[String, Array[Byte]]()
-    private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    private val server = graft.sources.Loopback.httpServer()
     server.createContext("/", (ex: HttpExchange) => handle(ex))
     server.start()
 
